@@ -59,13 +59,10 @@ object Bench {
     // defaults — the driver's bench numbers are untouched; keys that
     // are not spark.*-prefixed cannot be injected as JVM properties,
     // which is why this is an env seam and not a -D.
-    // Entries split on ',' or ';' (semicolon for values that contain a
-    // comma); an entry with an empty key ("=x") is skipped, not set.
+    // Entries split per SessionTuning.parseSessionConf (';' when
+    // present, so values may contain commas; ',' otherwise).
     sys.env.get("SPARK_GRAFT_SESSION_CONF").foreach {
-      _.split("[,;]").map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        if (k.nonEmpty) spark.conf.set(k, v)
-      }
+      SessionTuning.parseSessionConf(_).foreach { case (k, v) => spark.conf.set(k, v) }
     }
 
     def runOnce(name: String): Unit =

@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.ExplainMode
   * reviewable evidence for plan-shape claims (Exchange counts, join
   * strategy changes, pushdown) in the optimization records.
   *
-  * Usage: runMain graft.ExplainDump [sfDir] [outDir] [onlyCsv] [k=v,k=v]
+  * Usage: runMain graft.ExplainDump [sfDir] [outDir] [onlyCsv] [k=v,k=v | k=v;k=v]
   *
   * The optional fourth argument sets session confs before planning —
   * e.g. `spark.graft.broadcastMaxRows=0` shows the shuffle-fallback plan
@@ -25,11 +25,7 @@ object ExplainDump {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = Paths.get(args.lift(1).getOrElse("plans/r16"))
     val only = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val confs = args.lift(3).toSeq.flatMap(_.split("[,;]")).map(_.trim)
-      .filter(_.contains("=")).flatMap { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        if (k.nonEmpty) Some((k, v)) else None
-      }
+    val confs = args.lift(3).toSeq.flatMap(SessionTuning.parseSessionConf)
     Files.createDirectories(outDir)
     val spark = SparkSession.builder()
       .master("local[4]")

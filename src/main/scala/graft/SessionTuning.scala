@@ -28,16 +28,22 @@ object SessionTuning {
         "in cur_verdict (the CCNet-style second stage)"),
     graft.operators.Dedup.BloomMinScanBytesKey ->
       ("minimum documents-scan size at which the large-corpus shapes " +
-        "engage: the minhash verify rescan's Bloom prune and " +
-        "dd_incremental's distinct-text (replica-collapsed) increment; " +
-        "smaller corpora keep the plain single-checkpoint plans"),
+        "engage: the minhash verify rescan's Bloom prune and, on a " +
+        "low-density corpus, dd_incremental's slim fp+signature " +
+        "checkpoint with a Bloom-pruned verify rescan; smaller corpora " +
+        "keep the plain single-checkpoint plans. dd_incremental's " +
+        "replica collapse is chosen by the measured text density " +
+        "(Sampling.textDensity), not by this key"),
     graft.operators.Sampling.BroadcastMaxRowsKey ->
       ("maximum measured row count at which a corpus-cardinality frame " +
         "(simhash fp table, minhash rep-id set, boilerplate heavy set, " +
         "contamination benchmark, rank offset tables) is broadcast-" +
-        "hinted; above it the gated sites fall back to shuffle " +
-        "equi-joins — BroadcastExchange's 8 GB / 512M-row ceilings " +
-        "make an ungated corpus hint a guaranteed abort at 10^10+ docs"),
+        "hinted, and at which the simhash rep-edge set is collected " +
+        "for dd_components' driver-side union-find; above it the gated " +
+        "sites fall back to shuffle equi-joins and the components to " +
+        "distributed min-label propagation — BroadcastExchange's 8 GB " +
+        "/ 512M-row ceilings make an ungated corpus hint a guaranteed " +
+        "abort at 10^10+ docs"),
     graft.operators.Sampling.PreRangeMinPairsKey ->
       ("minimum closed-form pair count at which a quadratic pair " +
         "output's presentation sort switches to the pre-ranged " +
@@ -46,6 +52,17 @@ object SessionTuning {
         "the output — which samples by re-running the lineage and so " +
         "generates the quadratic output twice; default ≈ one 128 MB " +
         "sort task of pairs, below which the fixed overhead cannot pay"))
+
+  /** `k=v` session-conf entries from one string — the
+    * SPARK_GRAFT_SESSION_CONF / ExplainDump seam. Entries split on `;`
+    * when the string has one (so a value may contain commas) and on `,`
+    * otherwise; entries without `=` or with an empty key are skipped. */
+  private[graft] def parseSessionConf(s: String): Seq[(String, String)] =
+    s.split(if (s.contains(";")) ";" else ",").toSeq.map(_.trim)
+      .filter(_.contains("=")).flatMap { kv =>
+        val Array(k, v) = kv.split("=", 2)
+        if (k.nonEmpty) Some((k, v)) else None
+      }
 
   /** Heap-aware `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`.
     *

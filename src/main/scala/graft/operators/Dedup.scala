@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.Tables
 import graft.functions.{Aggregates, NativeExpressions}
@@ -901,9 +902,7 @@ object Dedup {
     // served from the countedCheckpoint memo — the materializing scan
     // IS the count job (the eager-checkpoint + count form paid two)
     val nDocs = Sampling.knownRowCount(tidDf).getOrElse(tidDf.count())
-    val maxBroadcastRows = spark.conf
-      .getOption(Sampling.BroadcastMaxRowsKey).map(_.toLong)
-      .getOrElse(Sampling.BroadcastMaxRowsDefault)
+    val maxBroadcastRows = Sampling.broadcastMaxRows(spark)
     // one size-gate decision for every corpus-cardinality hint below
     // (each gated frame is ≤ nDocs rows) — the ddSimhashPairs pattern
     def gated(df: DataFrame): DataFrame =
@@ -1148,9 +1147,7 @@ object Dedup {
     * so the quadratic output flows through exactly one sort (the gate's
     * ORDER BY) and nothing else. */
   def ddSimhash(spark: SparkSession, sfDir: String): DataFrame =
-    ddSimhashPairs(spark, sfDir, spark.conf
-      .getOption(Sampling.BroadcastMaxRowsKey).map(_.toLong)
-      .getOrElse(Sampling.BroadcastMaxRowsDefault))
+    ddSimhashPairs(spark, sfDir, Sampling.broadcastMaxRows(spark))
 
   /** [[ddSimhash]] at an arbitrary broadcast-row gate — the seam
     * PlanAuditSpec drives to 0 to prove the shuffle fallback plans no
@@ -1365,14 +1362,24 @@ object Dedup {
     * near-dup graph — the step that turns PAIRS into dedup DECISIONS
     * (every member of a component collapses to its minimum rep id).
     *
-    * Distributed shape: iterative min-label propagation — per round, a
-    * node takes the min of its own label and its neighbors' labels (one
-    * join + one map-side-combinable min aggregation on the edge list),
-    * converging in O(component diameter) rounds; near-dup components are
-    * shallow, and the loop is capped and convergence-checked (the one
-    * driver-side action per round is the iteration contract, same as any
-    * iterative MLlib algorithm). The oracle recomputes the fixpoint as a
-    * DuckDB recursive CTE. */
+    * Shape decided from the MEASURED rep-edge set (the
+    * [[Sampling.gatedBroadcast]] rule): one counted checkpoint
+    * materializes the distinct rep edges and memoizes their count. At
+    * or under [[Sampling.BroadcastMaxRowsKey]] the edges are collected
+    * (one job over the cached blocks) and labeled by a driver-side
+    * union-find whose roots are component minima — a fixed job count
+    * however deep the components are, where the distributed loop pays
+    * jobs per round (two eager checkpoints and a convergence count, each
+    * shuffle its own AQE job: 85 jobs for 6 rounds at sf0.1). Near-dup
+    * rep graphs are small (63k edges among 4.7k reps at sf0.1).
+    *
+    * Distributed fallback, above the gate: iterative min-label
+    * propagation — per round, a node takes the min of its own label and
+    * its neighbors' labels (one join + one map-side-combinable min
+    * aggregation on the edge list) followed by a pointer jump, capped at
+    * [[MaxCcRounds]] and convergence-checked (one driver-side action per
+    * round, same as any iterative MLlib algorithm). The oracle
+    * recomputes the fixpoint as a DuckDB recursive CTE. */
   val MaxCcRounds = 20
 
   def ddComponents(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1390,7 +1397,7 @@ object Dedup {
     * label IS the minimum doc_id of the component (reps are fp-group
     * minima, components are rep minima), so `is_kept = (doc_id ==
     * component)`: one boolean a downstream `filter` applies to drop
-    * every near-duplicate in one pass. Same iterative machinery as
+    * every near-duplicate in one pass. Same component labels as
     * dd_components; one extra map-only simhash pass re-keys docs to
     * their fp group. */
   def ddDecisions(spark: SparkSession, sfDir: String): DataFrame =
@@ -1444,7 +1451,9 @@ object Dedup {
     * fp-group aggregate, the band self-join and the full label-
     * propagation loop (the three most expensive first-pass rows in the
     * dd chain); the fixpoint is deterministic per corpus, so one build
-    * serves them all. Entries are checkpoint-backed on construction. */
+    * serves them all. Entries are materialized on construction:
+    * checkpoint-backed, or (the local component labels) a join of the
+    * fp-group checkpoint to a driver-built local relation. */
   private val frameCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
@@ -1460,7 +1469,7 @@ object Dedup {
     * runs twice more inside edge-building (and again in final joins).
     * Session-cached ([[cachedFrame]]): dd_components, dd_decisions and
     * cur_verdict all start from this table. */
-  private def fpGroups(spark: SparkSession, sfDir: String): DataFrame = {
+  private[graft] def fpGroups(spark: SparkSession, sfDir: String): DataFrame = {
     // dependency OUTSIDE the closure — see simhashFpEdges' note on
     // nested computeIfAbsent ("Recursive update")
     val fp = simhashFp(spark, sfDir)
@@ -1471,10 +1480,9 @@ object Dedup {
     }
   }
 
-  /** Iterative min-label propagation over the rep near-dup graph:
-    * (rep_id, component). See [[ddComponents]] for the algorithm notes.
-    * Session-cached: the converged fixpoint (a select over the last
-    * round's checkpoint) is reused by every consumer. */
+  /** (rep_id, component) over the rep near-dup graph. See
+    * [[ddComponents]] for the algorithm notes. Session-cached: the
+    * fixpoint is reused by every consumer. */
   private def repComponents(spark: SparkSession, sfDir: String): DataFrame = {
     // dependency OUTSIDE the closure — see simhashFpEdges' note on
     // nested computeIfAbsent ("Recursive update")
@@ -1484,22 +1492,100 @@ object Dedup {
     }
   }
 
-  private def repComponentsCore(groups: DataFrame): DataFrame = {
+  // private[graft]: ComponentsSpec runs both shapes on one groups frame
+  // through this UNCACHED core (the session cache would serve the first
+  // build to both).
+  private[graft] def repComponentsCore(groups: DataFrame): DataFrame = {
     val bandKeys = simhashBandKeys(col("fp"))
     val bands = groups.select(col("fp"), col("rep_id"), explode(bandKeys).as("bk"))
+    // ONE job materializes the edge set and memoizes its count for the
+    // shape gate; both shapes read the checkpoint.
+    val edges = Sampling.countedCheckpoint(bands.as("x").join(bands.as("y"),
+        col("x.bk") === col("y.bk") && col("x.rep_id") < col("y.rep_id") &&
+          bit_count(col("x.fp").bitwiseXOR(col("y.fp"))) <= HammingMax)
+      .select(col("x.rep_id").as("a"), col("y.rep_id").as("b"))
+      .distinct())
+    labelComponents(groups.select(col("rep_id")), edges)
+  }
+
+  /** (rep_id, component) for every `reps` row, component = the minimum
+    * rep_id connected to it through `edges` (a, b) — a
+    * [[Sampling.countedCheckpoint]] frame, so the gate reads its memo.
+    * Within the broadcast gate: [[localComponents]]; above it:
+    * [[propagateComponents]]. */
+  private[graft] def labelComponents(reps: DataFrame, edges: DataFrame): DataFrame =
+    if (Sampling.underBroadcastGate(edges)) localComponents(reps, edges)
+    else propagateComponents(reps, edges)
+
+  /** Collect the edges and label them with [[unionFindMinRoots]] on the
+    * driver; reps it does not relabel (roots, reps in no edge) keep
+    * their own id. */
+  private def localComponents(reps: DataFrame, edges: DataFrame): DataFrame = {
+    // one job: each partition ships two primitive arrays, not rows
+    val parts = edges.rdd.mapPartitions { it =>
+      val a = Array.newBuilder[Long]
+      val b = Array.newBuilder[Long]
+      it.foreach { r => a += r.getLong(0); b += r.getLong(1) }
+      Iterator((a.result(), b.result()))
+    }.collect()
+    val (ids, comps) = unionFindMinRoots(
+      Array.concat(parts.map(_._1).toIndexedSeq: _*),
+      Array.concat(parts.map(_._2).toIndexedSeq: _*))
+    val schema = StructType(Seq(
+      StructField("rep_id", LongType, nullable = false),
+      StructField("component", LongType, nullable = false)))
+    val rows = new java.util.ArrayList[Row](ids.length)
+    ids.indices.foreach(i => rows.add(Row(ids(i), comps(i))))
+    // No broadcast hint: the local relation's exact size lets the
+    // planner's own threshold choose, and a hint cached here would
+    // outlive a later session's gate setting.
+    val labels = reps.sparkSession.createDataFrame(rows, schema)
+    reps.join(labels, Seq("rep_id"), "left")
+      .select(col("rep_id"), coalesce(col("component"), col("rep_id")).as("component"))
+  }
+
+  /** Union-find over the edge list (a(i), b(i)): returns, for every id
+    * that is NOT its component's minimum, (id, component minimum) —
+    * roots label themselves and callers default them. Ids are indexed
+    * through their sorted distinct array and every union links the
+    * larger root under the smaller, so a root is always its set's
+    * minimum index, i.e. its minimum id; finds use path halving. */
+  private def unionFindMinRoots(a: Array[Long], b: Array[Long]): (Array[Long], Array[Long]) = {
+    val sorted = new Array[Long](a.length + b.length)
+    System.arraycopy(a, 0, sorted, 0, a.length)
+    System.arraycopy(b, 0, sorted, a.length, b.length)
+    java.util.Arrays.sort(sorted)
+    var n = 0
+    sorted.indices.foreach { i =>
+      if (i == 0 || sorted(i) != sorted(i - 1)) { sorted(n) = sorted(i); n += 1 }
+    }
+    val ids = java.util.Arrays.copyOf(sorted, n)
+    val parent = Array.tabulate(n)(identity)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    a.indices.foreach { e =>
+      val ra = find(java.util.Arrays.binarySearch(ids, a(e)))
+      val rb = find(java.util.Arrays.binarySearch(ids, b(e)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val root = Array.tabulate(n)(find)
+    val members = (0 until n).filter(i => root(i) != i).toArray
+    (members.map(ids), members.map(i => ids(root(i))))
+  }
+
+  /** Distributed min-label propagation with pointer jumping: the
+    * [[labelComponents]] shape above the broadcast gate. */
+  private def propagateComponents(reps: DataFrame, edges: DataFrame): DataFrame = {
     // localCheckpoint (eager) after every round: without lineage
     // truncation each round's plan embeds two copies of the previous
     // one — an exponentially growing logical plan that exhausts the
     // driver long before the data does.
-    val edges = bands.as("x").join(bands.as("y"),
-        col("x.bk") === col("y.bk") && col("x.rep_id") < col("y.rep_id") &&
-          bit_count(col("x.fp").bitwiseXOR(col("y.fp"))) <= HammingMax)
-      .select(col("x.rep_id").as("a"), col("y.rep_id").as("b"))
-      .distinct()
-      .localCheckpoint(true)
     val bidir = edges.unionByName(
       edges.select(col("b").as("a"), col("a").as("b")))
-    var labels = groups.select(col("rep_id"), col("rep_id").as("component"))
+    var labels = reps.select(col("rep_id"), col("rep_id").as("component"))
       .localCheckpoint(true)
     var converged = false
     var round = 0

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -218,11 +218,22 @@ object Sampling {
     * callers must pass a frame that is cheap to count — checkpointed,
     * artifact-backed, or a bounded aggregate — never a raw corpus
     * lineage. */
-  def gatedBroadcast(df: DataFrame): DataFrame = {
-    val max = df.sparkSession.conf.getOption(BroadcastMaxRowsKey)
-      .map(_.toLong).getOrElse(BroadcastMaxRowsDefault)
-    if (knownRowCount(df).getOrElse(df.count()) <= max) broadcast(df) else df
-  }
+  def gatedBroadcast(df: DataFrame): DataFrame =
+    if (underBroadcastGate(df)) broadcast(df) else df
+
+  /** The session's [[BroadcastMaxRowsKey]] gate (default
+    * [[BroadcastMaxRowsDefault]]). */
+  private[graft] def broadcastMaxRows(spark: SparkSession): Long =
+    spark.conf.getOption(BroadcastMaxRowsKey).map(_.toLong)
+      .getOrElse(BroadcastMaxRowsDefault)
+
+  /** The one gate decision behind [[gatedBroadcast]] and every other
+    * decide-from-data site that may move a frame to the driver or to
+    * every executor: is `df`'s MEASURED row count within
+    * [[BroadcastMaxRowsKey]]? Same count rules as [[gatedBroadcast]]
+    * (memo first, else an action). */
+  private[graft] def underBroadcastGate(df: DataFrame): Boolean =
+    knownRowCount(df).getOrElse(df.count()) <= broadcastMaxRows(df.sparkSession)
 
   /** PLANNING-estimate-gated broadcast hint for frames that are plain
     * scans/filters of a stored table (no checkpoint to count): hint
@@ -238,9 +249,7 @@ object Sampling {
     * relation), still orders of magnitude inside the 8 GB ceiling at
     * the 64 MB default gate. */
   def statsGatedBroadcast(df: DataFrame): DataFrame = {
-    val maxRows = df.sparkSession.conf.getOption(BroadcastMaxRowsKey)
-      .map(_.toLong).getOrElse(BroadcastMaxRowsDefault)
-    val maxBytes = BigInt(maxRows) * 16
+    val maxBytes = BigInt(broadcastMaxRows(df.sparkSession)) * 16
     if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBytes)
       broadcast(df)
     else df

@@ -1,18 +1,15 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Sampling}
 
-/** Differential guard for the r17 dd_incremental large-corpus path:
-  * above [[Dedup.BloomMinScanBytesKey]] the operator REPLICA-COLLAPSES —
-  * each distinct text is tokenized/signed once, banding + exact match +
-  * Jaccard verification run over distinct texts (a matching corpus text
-  * represented by its smallest corpus doc id), and per-doc verdicts
-  * expand at the end — where the small-corpus path checkpoints the full
-  * per-document signature table. The two paths must emit identical
-  * verdicts, including the best-candidate tie-break: the doc-level
-  * (j desc, b_id asc) winner must equal the text-level
-  * max(struct(j, -min_corpus_id)) pick on a fixture with replica
-  * cliques straddling the batch split.
+/** Differential guard for the dd_incremental slim path: on a
+  * LOW-density corpus past [[Dedup.BloomMinScanBytesKey]] the operator
+  * checkpoints only fp + signatures, generates candidates from
+  * signatures alone and re-tokenizes just the Bloom-pruned candidate
+  * docs for verification — where the small-corpus path checkpoints the
+  * full per-document signature table, shingles included. The two paths
+  * must emit identical verdicts. (The replica collapse is chosen by
+  * measured density, not this key; IncrementalCollapseSpec guards it.)
   */
 class IncrementalSlimSpec extends SparkSpec {
 
@@ -21,6 +18,12 @@ class IncrementalSlimSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
 
   test("bloom-pruned slim path emits the small-corpus path's exact verdicts") {
+    // the slim path is the LOW-density branch past the scan-bytes gate;
+    // on a replica-dense fixture the forced run would take the replica
+    // collapse instead and this differential would test nothing it claims
+    val (nDocs, nDistinct) = Sampling.textDensity(Tables.documents(spark, sfDir))
+    assert(nDocs < 2 * nDistinct,
+      s"fixture density $nDocs/$nDistinct selects the replica collapse, not the slim path")
     val small = run() // default: sf0.001 sits far below the scan-bytes gate
     val key = Dedup.BloomMinScanBytesKey
     spark.conf.set(key, "0") // force the large-corpus path

@@ -1,37 +1,74 @@
 package graft
 
 import java.security.MessageDigest
+import java.util.concurrent.CancellationException
+import java.util.concurrent.atomic.AtomicReference
+
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration.Duration
+import scala.util.{Failure, Success, Try}
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.operators.Curation
 
 /** Orchestrated end-to-end pipeline run with standardized artifacts —
   * the Spark-native equivalent of the reference's Prefect flow
   * (orchestration/prefect_flow.py:50-97: 17 → 18 → 22 → 23 → reward
   * report, each stage a subprocess writing a jsonl/csv artifact under a
-  * run id) plus its manifest machinery (utils/manifest.py: per-stage
-  * signatures, skip-if-unchanged; utils/contracts.py: a contract JSON
-  * next to each artifact).
+  * run id, each handing its artifact to the next) plus its manifest
+  * machinery (utils/manifest.py: per-stage signatures,
+  * skip-if-unchanged; utils/contracts.py: a contract JSON next to each
+  * artifact).
   *
   * Here every stage is already a pure Catalyst plan builder in
   * `SparkEntry.queries`, so orchestration reduces to: resolve each named
   * stage, write its result as parquet under `outDir/<runId>/<stage>`,
-  * and record a manifest row (stage, rows, path, wall millis,
-  * signature). No subprocesses, no intermediate jsonl — lineage stays
-  * inside one Spark session, and a failed stage fails the run loudly
-  * rather than leaving a half-written artifact chain.
+  * and record a manifest row (stage, rows, path, start offset, wall
+  * millis, signature). No subprocesses, no intermediate jsonl — lineage
+  * stays inside one Spark session, and a failed stage fails the run
+  * loudly rather than leaving a half-written artifact chain.
+  *
+  * The requested stages run as a DAG. A stage that composes upstream
+  * stages (today cur_verdict, over dd_decisions, tx_gopher and
+  * tx_contamination) starts once those of its upstreams that are in the
+  * same stage list have written their artifacts, and reads them when all
+  * of them are listed; every other stage starts at once. Concurrent
+  * stages share the cores through Spark's scheduler: most of a chain's
+  * jobs are one or two tasks, so one stage alone leaves executors idle.
+  *
+  * Concurrency audit. Concurrent stage builders meet only in the
+  * operators' `ConcurrentHashMap` session caches (Dedup's frameCache,
+  * pairFrameCache and verifiedPieceCache; Similarity's knnEdgeCache,
+  * centTableCache and lloydsVmCache). `computeIfAbsent` locks the key's
+  * hash bin while it builds, so concurrent builds of one key wait for the
+  * first (one build per key, as wanted), and builds of different keys
+  * that share a bin serialize. A build that nests into another map can
+  * deadlock only through a cycle of maps; the one nesting is
+  * centTableCache → lloydsVmCache (the Lloyd's trainers read the
+  * checkpointed vector table), which has none, and no build nests into
+  * its own map (dependencies are resolved before the closure — Dedup's
+  * "Recursive update" note). Per-query scratch registration
+  * (`Sampling.trackScratch`) and the checkpoint row-count memo are
+  * concurrent collections; no operator registers views or functions in
+  * the session. The operator objects initialize on the calling thread
+  * (`run` resolves `SparkEntry.queries` before any stage thread starts),
+  * so no two stage threads race through one object's initializer.
   *
   * Scale notes (100 TB):
   *  - artifacts are written with each stage's native output partitioning
   *    (no coalesce(1) — that is Verify's small-file convenience, wrong at
   *    scale);
-  *  - row counts come from the written parquet footers (metadata-only
-  *    aggregate pushdown), not a second evaluation of the stage plan;
+  *  - row counts come from the written parquet footers, read on the
+  *    driver (no Spark job, no second evaluation of the stage plan);
   *  - incremental signatures hash the input's FileSystem *metadata*
   *    (path, length, modification time — one namenode/object-store
-  *    listing), never file contents: the reference streams every input
-  *    byte through sha256 (utils/manifest.py compute_hash), which is a
-  *    full extra read of the corpus at 100 TB;
+  *    listing per run), never file contents: the reference streams every
+  *    input byte through sha256 (utils/manifest.py compute_hash), which
+  *    is a full extra read of the corpus at 100 TB;
   *  - all existence checks go through Hadoop's FileSystem so they hold
   *    on HDFS/S3/ABFS, not only file://.
   */
@@ -44,13 +81,13 @@ object Pipeline {
 
   /** The pretraining-corpus curation chain: rule gate, dedup decisions,
     * contamination, the composed per-doc verdict, mixture resample,
-    * sequence packing. Each stage is an INDEPENDENT full-corpus query
-    * (oracle-gated `SparkEntry.queries` entries) writing its own
-    * artifact; the cur_verdict artifact is the drop-list — a consumer
+    * sequence packing. Every stage but cur_verdict is a full-corpus
+    * query (an oracle-gated `SparkEntry.queries` entry) writing its own
+    * artifact, and all of them run concurrently; cur_verdict waits for
+    * the dd_decisions, tx_gopher and tx_contamination artifacts and
+    * joins them. The cur_verdict artifact is the drop-list — a consumer
     * filters tx_mix/tx_pack output on `train_keep = 1` (they are not
-    * pre-filtered, and cur_verdict re-evaluates its inputs rather than
-    * reading the sibling artifacts — acceptable at harness scale, while
-    * a 100 TB run would persist each stage once and join artifacts). */
+    * pre-filtered). */
   val curationStages: Seq[String] =
     Seq("tx_gopher", "dd_decisions", "tx_contamination", "cur_verdict",
       "tx_mix", "tx_pack")
@@ -58,52 +95,105 @@ object Pipeline {
   /** The stage-21 cluster-analysis chain: Lloyd's cluster sizes, per-
     * vector assignment, per-cluster label profile, simplified-silhouette
     * separability, PCA projection. Same artifact contract as
-    * [[curationStages]]: each stage is an independent gated query; the
-    * three Lloyd's-derived stages re-train the (checkpointed) centroid
-    * chain per stage at harness scale, where a 100 TB run persists the
+    * [[curationStages]]; no stage declares an upstream, so all five run
+    * concurrently. The three Lloyd's-derived stages share one trained
+    * centroid table through the session cache (the first to ask trains
+    * it, the others wait for it), where a 100 TB run persists the
     * centroid artifact once and joins it (the analysis passes are
     * map-only against a broadcast of that artifact). */
   val clusteringStages: Seq[String] =
     Seq("p21_lloyds", "p21_cluster_assign", "p21_cluster_profile",
       "p21_separability", "p21_pca")
 
+  /** One manifest row. `started_ms` is the stage's start as an offset
+    * from the start of the run, `millis` its own wall time: concurrent
+    * stages overlap, and a composed stage starts no earlier than its
+    * upstreams end. */
   final case class StageArtifact(
       run_id: String,
       stage: String,
       path: String,
       rows: Long,
+      started_ms: Long,
       millis: Long,
       signature: String,
       skipped: Boolean)
 
-  /** Input signature for a stage: sha256 over every LEAF file's status
-    * (qualified path, length, mtime) under `sfDir` + the stage name,
-    * via one RECURSIVE metadata listing (`fs.listFiles(p, true)`) — no
-    * data read. Recursion matters for nested table directories (the
-    * production layout): a part-file rewritten in place inside a
-    * subdirectory need not change the parent's entry — HDFS directory
-    * mtime only moves on entry add/remove, and object-store pseudo-dirs
-    * report zero — so a top-level listing would let incremental mode
-    * silently skip a stage against stale inputs. */
-  private[graft] def inputSignature(spark: SparkSession, sfDir: String, stage: String): String = {
+  /** The stages that compose upstream artifacts: stage → (its upstream
+    * stages, its composition over their artifact frames in that order).
+    * A def, built per run: the operator objects initialize inside
+    * [[run]], never while `Pipeline` itself initializes. */
+  private def composed(spark: SparkSession, sfDir: String)
+      : Map[String, (Seq[String], Seq[DataFrame] => DataFrame)] = Map(
+    "cur_verdict" -> (Seq("dd_decisions", "tx_gopher", "tx_contamination"),
+      in => Curation.curVerdictOf(spark, sfDir, in(0), in(1), in(2))))
+
+  /** Every LEAF file's status (qualified path, length, mtime) under
+    * `sfDir`, sorted, via one RECURSIVE metadata listing
+    * (`fs.listFiles(p, true)`) — no data read. Recursion matters for
+    * nested table directories (the production layout): a part-file
+    * rewritten in place inside a subdirectory need not change the
+    * parent's entry — HDFS directory mtime only moves on entry
+    * add/remove, and object-store pseudo-dirs report zero — so a
+    * top-level listing would let incremental mode silently skip a stage
+    * against stale inputs. */
+  private def inputListing(spark: SparkSession, sfDir: String): Seq[String] = {
     val p = new Path(sfDir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val md = MessageDigest.getInstance("SHA-256")
-    md.update(stage.getBytes("UTF-8"))
     val it = fs.listFiles(p, true)
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
     while (it.hasNext) {
       val st = it.next()
       entries += s"|${st.getPath.toUri.getPath}:${st.getLen}:${st.getModificationTime}"
     }
-    entries.sorted.foreach(e => md.update(e.getBytes("UTF-8")))
+    entries.sorted.toSeq
+  }
+
+  /** A stage's signature: sha256 over the stage name, the session values
+    * of the result-affecting knobs that can change it
+    * ([[SessionTuning.resultKnobsOf]]), its upstream stages' signatures
+    * (a composed stage is stale when any input artifact is) and the
+    * input listing. Shape-only knobs are not hashed: they change plans,
+    * never results. */
+  private def signature(spark: SparkSession, stage: String, listing: Seq[String],
+      upstreamSignatures: Seq[String]): String = {
+    val md = MessageDigest.getInstance("SHA-256")
+    md.update(stage.getBytes("UTF-8"))
+    SessionTuning.resultKnobsOf(stage).foreach { k =>
+      md.update(s"|$k${spark.conf.getOption(k).fold("")("=" + _)}".getBytes("UTF-8"))
+    }
+    upstreamSignatures.foreach(s => md.update(s"|$s".getBytes("UTF-8")))
+    listing.foreach(e => md.update(e.getBytes("UTF-8")))
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** Run `stages` in order against `sfDir`, writing one parquet artifact
-    * per stage under `outDir/<runId>/`, and return the manifest (also
-    * persisted as `outDir/<runId>/_manifest`, single JSON file; each
-    * artifact carries a `_contract.json` with schema + row count).
+  /** Row count of a parquet artifact from its part files' footers, read
+    * on the driver — no Spark job. Hidden files (`_SUCCESS`, `.crc`,
+    * the contract) are skipped, as Spark's own file index skips them. */
+  private[graft] def footerRowCount(spark: SparkSession, path: String): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    val dir = new Path(path)
+    dir.getFileSystem(conf).listStatus(dir).iterator
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map { st =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try reader.getRecordCount finally reader.close()
+      }.sum
+  }
+
+  /** Run `stages` against `sfDir` as a DAG (see the object scaladoc),
+    * writing one parquet artifact per stage under `outDir/<runId>/`, and
+    * return the manifest in the requested stage order (also persisted as
+    * `outDir/<runId>/_manifest`, single JSON file; each artifact carries
+    * a `_contract.json` with schema + row count).
+    *
+    * Each stage runs on its own daemon thread in its own Spark job group.
+    * When a stage fails, the run cancels every stage's job group,
+    * including jobs the other stages have not submitted yet, waits for
+    * the stage threads to end, writes no manifest and throws an
+    * exception naming the failed stage, with the stage's own exception
+    * as its cause.
     *
     * With `incremental = true`, a stage whose signature matches the
     * previous run's manifest AND whose artifact still exists is skipped
@@ -118,6 +208,8 @@ object Pipeline {
     import spark.implicits._
     val unknown = stages.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown pipeline stages: ${unknown.mkString(", ")}")
+    val repeated = stages.diff(stages.distinct)
+    require(repeated.isEmpty, s"repeated pipeline stages: ${repeated.mkString(", ")}")
 
     val conf = spark.sessionState.newHadoopConf()
     def fsFor(p: Path) = p.getFileSystem(conf)
@@ -131,26 +223,69 @@ object Pipeline {
           .map(r => r.getString(0) -> r.getString(1)).toMap
       else Map.empty
 
-    val artifacts = stages.map { stage =>
-      val path = s"$outDir/$runId/$stage"
+    val compositions = composed(spark, sfDir)
+    def upstreams(stage: String): Seq[String] =
+      compositions.get(stage).fold(Seq.empty[String])(_._1)
+    val listing = inputListing(spark, sfDir)
+    def signatureOf(stage: String): String =
+      signature(spark, stage, listing, upstreams(stage).map(signatureOf))
+    val signatures = stages.map(s => s -> signatureOf(s)).toMap
+
+    val sc = spark.sparkContext
+    val runStart = System.nanoTime()
+    val groupPrefix = s"graft-pipeline-${java.util.UUID.randomUUID()}"
+    val done = stages.map(_ -> Promise[StageArtifact]()).toMap
+    val failure = new AtomicReference[(String, Throwable)]()
+
+    def artifactPath(stage: String) = s"$outDir/$runId/$stage"
+    def runStage(stage: String): StageArtifact = {
+      val path = artifactPath(stage)
       val hPath = new Path(path)
-      val sig = inputSignature(spark, sfDir, stage)
-      val skip = prevSignatures.get(stage).contains(sig) && fsFor(hPath).exists(hPath)
+      val sig = signatures(stage)
       val t0 = System.nanoTime()
-      if (!skip) {
-        SparkEntry.queries(stage)(spark, sfDir).write.mode("overwrite").parquet(path)
+      val skip = prevSignatures.get(stage).contains(sig) && fsFor(hPath).exists(hPath)
+      val columns = if (skip) None else {
+        val result = compositions.get(stage).filter(_._1.forall(done.contains)) match {
+          case Some((ups, compose)) => compose(ups.map(u => spark.read.parquet(artifactPath(u))))
+          case None => SparkEntry.queries(stage)(spark, sfDir)
+        }
+        result.write.mode("overwrite").parquet(path)
+        Some(result.schema.fieldNames)
       }
-      // Count what is actually on disk (not a re-run of the stage plan).
-      // An empty-projection parquet count is row-group-metadata driven in
-      // the vectorized reader (no column decode), but it IS a distributed
-      // scan job — true footer-only aggregate pushdown needs the DSv2
-      // reader, which parquet does not use by default.
-      val written = spark.read.parquet(path)
-      val rows = written.count()
-      if (!skip) writeContract(spark, path, written.schema.fieldNames, rows, sig)
-      StageArtifact(runId, stage, path, rows, (System.nanoTime() - t0) / 1000000L, sig, skip)
+      val rows = footerRowCount(spark, path)
+      columns.foreach(writeContract(spark, path, _, rows, sig))
+      StageArtifact(runId, stage, path, rows,
+        (t0 - runStart) / 1000000L, (System.nanoTime() - t0) / 1000000L, sig, skip)
     }
-    val manifest = artifacts.toDF()
+
+    val threads = stages.map { stage =>
+      val t = new Thread(() => {
+        val result: Try[StageArtifact] = try {
+          upstreams(stage).filter(done.contains)
+            .foreach(u => Await.ready(done(u).future, Duration.Inf))
+          if (failure.get != null) throw new CancellationException(
+            s"pipeline stage $stage not started: stage ${failure.get._1} failed")
+          sc.setJobGroup(s"$groupPrefix-$stage", s"graft.Pipeline $runId: $stage")
+          try Success(runStage(stage)) finally sc.clearJobGroup()
+        } catch {
+          case e: Throwable => Failure(e)
+        }
+        result.failed.foreach { e =>
+          if (failure.compareAndSet(null, stage -> e))
+            stages.foreach(s => sc.cancelJobGroupAndFutureJobs(s"$groupPrefix-$s"))
+        }
+        done(stage).complete(result)
+      }, s"graft-pipeline-$stage")
+      t.setDaemon(true)
+      t
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    Option(failure.get).foreach { case (stage, e) =>
+      throw new RuntimeException(s"pipeline stage $stage failed: $e", e)
+    }
+
+    val manifest = stages.map(s => done(s).future.value.get.get).toDF()
     manifest.coalesce(1).write.mode("overwrite").json(manifestPath.toString)
     manifest
   }

@@ -121,9 +121,10 @@ object Rehearsal {
         noop(TextOps.boilerplateFromArtifact(spark, sfDir, s"$workDir/boiler"))
       })
 
-    // The curation gate chain is already artifact-shaped (independent
-    // full-corpus stages writing parquet); run it through Pipeline so
-    // each stage's wall time lands in the manifest.
+    // The curation gate chain is already artifact-shaped (stages writing
+    // parquet, cur_verdict joining three of them); run it through
+    // Pipeline so each stage's wall time lands in the manifest. Stages
+    // run concurrently, so the times overlap rather than add up.
     val curation = {
       val manifest = Pipeline.run(spark, sfDir, s"$workDir/curation", "rehearsal",
         Pipeline.curationStages).collect()

@@ -53,6 +53,26 @@ object SessionTuning {
         "generates the quadratic output twice; default ≈ one 128 MB " +
         "sort task of pairs, below which the fixed overhead cannot pay"))
 
+  /** The [[Knobs]] whose values change an operator's RESULT; every other
+    * knob changes only the plan's shape. `graft.Pipeline` hashes their
+    * session values into the stage signatures, so an incremental re-run
+    * after flipping one re-runs the stages it can change. */
+  val ResultKnobs: Seq[String] = Seq(
+    graft.functions.Quantiles.ApproxKey,
+    graft.operators.Similarity.MaxCentroidsKey,
+    graft.operators.Curation.ClassifierGateKey)
+
+  /** The stages a [[ResultKnobs]] key can change, for keys read by one
+    * operator only (KnobRegistrySpec pins the classifier gate's one
+    * read, in cur_verdict's composition). A key not listed here reaches
+    * call sites across the suite and counts for every stage. */
+  private val ResultKnobStages: Map[String, Set[String]] = Map(
+    graft.operators.Curation.ClassifierGateKey -> Set("cur_verdict"))
+
+  /** The [[ResultKnobs]] whose values can change `stage`'s result. */
+  def resultKnobsOf(stage: String): Seq[String] =
+    ResultKnobs.filter(k => ResultKnobStages.get(k).forall(_.contains(stage)))
+
   /** `k=v` session-conf entries from one string — the
     * SPARK_GRAFT_SESSION_CONF / ExplainDump seam. Entries split on `;`
     * when the string has one (so a value may contain commas) and on `,`

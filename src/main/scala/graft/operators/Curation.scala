@@ -446,26 +446,35 @@ object Curation {
     * one `train_keep` flag (kept representative ∧ passes rules ∧ not
     * contaminated ∧ not a benchmark doc).
     *
+    * This standalone builder evaluates the three stages inside its own
+    * plan (the `SparkEntry.queries` / oracle form). `graft.Pipeline`
+    * runs the stages once, persists them, and feeds the three artifacts
+    * to [[curVerdictOf]] instead, when the same run lists them. */
+  def curVerdict(spark: SparkSession, sfDir: String): DataFrame =
+    curVerdictOf(spark, sfDir, Dedup.ddDecisions(spark, sfDir),
+      txGopher(spark, sfDir), TextOps.txContamination(spark, sfDir))
+
+  /** The cur_verdict composition over its three input frames, each with
+    * its stage's output columns: `decisions` (dd_decisions: doc_id,
+    * component, is_kept), `gopher` (tx_gopher: doc_id, keep) and
+    * `contamination` (tx_contamination: doc_id per contaminated pair).
+    *
     * Scale shape: dedup ⋈ gopher is a corpus×corpus equi-join on doc_id
-    * (AQE-splittable, both sides already projected to 2–3 columns); the
+    * (AQE-splittable, both sides projected to 2–3 columns); the
     * contaminated-doc set is tiny by construction and broadcasts into a
-    * left join. Each branch reuses its operator's own scan structure —
-    * at 100 TB run the stages once, persist, and join the artifacts
-    * (graft.Pipeline's job); this single-plan form is the
-    * correctness-gated specification of that composition. */
-  def curVerdict(spark: SparkSession, sfDir: String): DataFrame = {
-    val dedup = Dedup.ddDecisions(spark, sfDir)
+    * left join. */
+  private[graft] def curVerdictOf(spark: SparkSession, sfDir: String,
+      decisions: DataFrame, gopher: DataFrame, contamination: DataFrame): DataFrame = {
+    val dedup = decisions
       .select(col("doc_id"), col("component"), col("is_kept").as("dedup_keep"))
-    val gopher = txGopher(spark, sfDir)
-      .select(col("doc_id"), col("keep").as("gopher_keep"))
+    val gopherKeep = gopher.select(col("doc_id"), col("keep").as("gopher_keep"))
     // Contaminated-id set: corpus-growing (it is a SUBSET of the
     // corpus), so checkpoint (tiny; also stops the verdict join from
     // re-running the contamination chain) and size-gate the hint.
     val contam = Sampling.trackScratch(Sampling.countedCheckpoint(
-      TextOps.txContamination(spark, sfDir)
-        .select(col("doc_id")).distinct()
+      contamination.select(col("doc_id")).distinct()
         .withColumn("__contam", lit(1L))))
-    val base = dedup.join(gopher, "doc_id")
+    val base = dedup.join(gopherKeep, "doc_id")
       .join(Sampling.gatedBroadcast(contam), Seq("doc_id"), "left")
       .select(col("doc_id"), col("component"), col("dedup_keep"), col("gopher_keep"),
         coalesce(col("__contam"), lit(0L)).as("contaminated"),

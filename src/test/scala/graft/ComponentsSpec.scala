@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, LocalRelation, ResolvedHint}
 
@@ -109,36 +108,6 @@ class ComponentsSpec extends SparkSpec {
     assert(local == bfsLabels(path, edges) && local.values.toSet == Set(0L))
     val e = intercept[IllegalStateException](withGate(0)(labelGraph(path, edges)))
     assert(e.getMessage.contains("did not converge"))
-  }
-
-  /** Jobs started while `body` runs. Marker jobs before and after
-    * bracket the window: listener events arrive in order, so once the
-    * closing marker is seen every job of `body` has been counted. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val markerKey = "componentsSpec.marker"
-    val markers = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val inWindow = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(markerKey))) match {
-          case Some(m) => inWindow.set(m == "open"); markers.put(m)
-          case None => if (inWindow.get) jobs.incrementAndGet()
-        }
-    }
-    def marker(m: String): Unit = {
-      sc.setLocalProperty(markerKey, m)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(markerKey, null)
-      assert(markers.poll(60, java.util.concurrent.TimeUnit.SECONDS) == m)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("open")
-      val out = body
-      marker("close")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   /** A fresh copy of the fixture corpus: no session cache has seen it. */

@@ -66,6 +66,24 @@ class KnobRegistrySpec extends AnyFunSuite {
     assert(readme.contains("## Cluster deployment"))
   }
 
+  test("result-affecting knobs are registry knobs; the stage-scoped one has one reader") {
+    assert(SessionTuning.ResultKnobs.toSet.subsetOf(SessionTuning.Knobs.keySet))
+    assert(SessionTuning.resultKnobsOf("cur_verdict") == SessionTuning.ResultKnobs)
+    assert(!SessionTuning.resultKnobsOf("tx_gopher")
+      .contains(graft.operators.Curation.ClassifierGateKey))
+    // The classifier gate is scoped to cur_verdict in the signatures, so
+    // its value may be read in one place only: the verdict composition.
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val readers =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { p =>
+        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        "getOption\\(ClassifierGateKey\\)".r.findAllMatchIn(text).map(_ => p.getFileName.toString)
+      }.toList
+      finally walk.close()
+    assert(readers == List("Curation.scala"), s"classifier gate read in: $readers")
+  }
+
   test("every registry knob carries a non-empty deployment description") {
     assert(SessionTuning.Knobs.values.forall(_.trim.nonEmpty))
   }

@@ -2,10 +2,15 @@ package graft
 
 import java.nio.file.Files
 
+import graft.operators.{Curation, Sampling}
+
 /** End-to-end orchestration: the default 17→18→22→23→report chain runs,
   * writes one artifact per stage plus a manifest + contracts, skips
   * unchanged stages in incremental mode, and fails loudly on unknown
-  * stages. */
+  * stages. The curation chain runs as a DAG: cur_verdict composes its
+  * upstreams' artifacts and equals its standalone builder; signatures
+  * chain and hash the result-affecting knobs; a failing stage cancels
+  * its siblings. */
 class PipelineSpec extends SparkSpec {
 
   test("default pipeline run writes all stage artifacts, manifest, contracts") {
@@ -131,6 +136,22 @@ class PipelineSpec extends SparkSpec {
     val manifest = Pipeline.run(spark, sfDir, out, "t5", Pipeline.curationStages).collect()
     assert(manifest.map(_.getAs[String]("stage")).toSeq == Pipeline.curationStages)
     assert(manifest.forall(_.getAs[Long]("rows") > 0))
+    // Every artifact equals its standalone query, and the manifest's
+    // footer row count equals a count of the written rows.
+    manifest.foreach { r =>
+      val stage = r.getAs[String]("stage")
+      val artifact = spark.read.parquet(r.getAs[String]("path"))
+      val standalone = SparkEntry.queries(stage)(spark, sfDir)
+      assert(artifact.except(standalone).isEmpty && standalone.except(artifact).isEmpty,
+        s"$stage artifact differs from its standalone query")
+      assert(r.getAs[Long]("rows") == artifact.count(), s"$stage footer row count")
+    }
+    // cur_verdict read its upstreams' artifacts: it started after all three ended.
+    val byStage = manifest.map(r => r.getAs[String]("stage") -> r).toMap
+    val upstreamEnd = Seq("dd_decisions", "tx_gopher", "tx_contamination").map { s =>
+      byStage(s).getAs[Long]("started_ms") + byStage(s).getAs[Long]("millis")
+    }.max
+    assert(byStage("cur_verdict").getAs[Long]("started_ms") >= upstreamEnd)
     // The verdict artifact is a full-corpus decision table with a
     // non-trivial keep/drop split, consumable via the contract check.
     assert(Pipeline.validateArtifact(spark, s"$out/t5/cur_verdict",
@@ -140,6 +161,112 @@ class PipelineSpec extends SparkSpec {
     assert(verdict.count() == nDocs)
     val kept = verdict.filter(org.apache.spark.sql.functions.col("train_keep") === 1L).count()
     assert(kept > 0 && kept < nDocs)
+  }
+
+  test("footer row count runs no Spark job") {
+    val path = Files.createTempDirectory("graft_footer").toString + "/a"
+    spark.range(0, 1000, 1, 3).write.parquet(path)
+    val (rows, jobs) = jobsDuring(Pipeline.footerRowCount(spark, path))
+    assert(rows == 1000L && jobs == 0)
+  }
+
+  /** The three upstream stages written by a Pipeline run, then
+    * cur_verdict composed over their artifacts, against the standalone
+    * builder — with the classifier gate off and on. */
+  private def assertComposedVerdictMatches(dir: String): Unit = {
+    val stages = Seq("dd_decisions", "tx_gopher", "tx_contamination", "cur_verdict")
+    for (gate <- Seq("off", "on")) {
+      spark.conf.set(Curation.ClassifierGateKey, gate)
+      try {
+        val out = Files.createTempDirectory("graft_verdict_feed").toString
+        Pipeline.run(spark, dir, out, "v", stages)
+        val fed = spark.read.parquet(s"$out/v/cur_verdict")
+        val standalone = Curation.curVerdict(spark, dir)
+        assert(fed.columns.toSeq == standalone.columns.toSeq)
+        assert(fed.except(standalone).isEmpty && standalone.except(fed).isEmpty,
+          s"artifact-fed cur_verdict differs from the standalone builder (classifier $gate)")
+      } finally spark.conf.unset(Curation.ClassifierGateKey)
+    }
+  }
+
+  test("artifact-fed cur_verdict equals the standalone builder on sf0.001") {
+    assertComposedVerdictMatches(sfDir)
+  }
+
+  test("artifact-fed cur_verdict equals the standalone builder on a replica corpus") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    // Five copies of every document (distinct ids), one of them with a
+    // one-word edit: density 2.5, so the replica-collapse shapes engage.
+    val dir = Files.createTempDirectory("graft_verdict_replica").toString
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    (0 until 5).map { k =>
+      val copy = docs.withColumn("doc_id", col("doc_id") * 5 + k)
+      if (k == 4) copy.withColumn("text", concat(col("text"), lit(" edited"))) else copy
+    }.reduce(_ unionByName _)
+      .write.parquet(s"$dir/documents.parquet")
+    val (nDocs, nDistinct) = Sampling.textDensity(Tables.documents(spark, dir))
+    assert(nDocs >= 2 * nDistinct)
+    assertComposedVerdictMatches(dir)
+  }
+
+  test("cur_verdict without its upstreams in the list runs the standalone builder") {
+    val out = Files.createTempDirectory("graft_verdict_alone").toString
+    val manifest = Pipeline.run(spark, sfDir, out, "a", Seq("cur_verdict")).collect()
+    assert(manifest.map(_.getAs[String]("stage")).toSeq == Seq("cur_verdict"))
+    assert(Seq("dd_decisions", "tx_gopher", "tx_contamination")
+      .forall(s => !new java.io.File(s"$out/a/$s").exists))
+    val artifact = spark.read.parquet(s"$out/a/cur_verdict")
+    val standalone = Curation.curVerdict(spark, sfDir)
+    assert(artifact.except(standalone).isEmpty && standalone.except(artifact).isEmpty)
+  }
+
+  test("signatures chain: a result knob re-runs its stage, a shape knob skips all") {
+    val out = Files.createTempDirectory("graft_pipeline_knobs").toString
+    val stages = Seq("tx_gopher", "dd_decisions", "tx_contamination", "cur_verdict")
+    def skipped(): Map[String, Boolean] =
+      Pipeline.run(spark, sfDir, out, "k", stages, incremental = true).collect()
+        .map(r => r.getAs[String]("stage") -> r.getAs[Boolean]("skipped")).toMap
+    Pipeline.run(spark, sfDir, out, "k", stages)
+    spark.conf.set(Curation.ClassifierGateKey, "on")
+    try {
+      assert(skipped() == Map("tx_gopher" -> true, "dd_decisions" -> true,
+        "tx_contamination" -> true, "cur_verdict" -> false))
+      assert(spark.read.parquet(s"$out/k/cur_verdict").columns.contains("clf_keep"))
+    } finally spark.conf.unset(Curation.ClassifierGateKey)
+    assert(!skipped()("cur_verdict"), "flipping the classifier back re-runs cur_verdict")
+    spark.conf.set(Sampling.BroadcastMaxRowsKey, "0")
+    try assert(skipped().values.forall(identity), "a shape-only knob must not re-run a stage")
+    finally spark.conf.unset(Sampling.BroadcastMaxRowsKey)
+  }
+
+  test("a failing stage fails the run: named, siblings cancelled, no manifest, no threads") {
+    import scala.jdk.CollectionConverters._
+    def pipelineThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("graft-pipeline-") && t.isAlive)
+    def assertClean(out: String): Unit = {
+      assert(!new java.io.File(s"$out/f/_manifest").exists)
+      assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+      assert(pipelineThreads.isEmpty)
+    }
+    // No documents table: every curation stage fails.
+    val empty = Files.createTempDirectory("graft_pipeline_nodocs").toString
+    val out1 = Files.createTempDirectory("graft_pipeline_fail").toString
+    val e1 = intercept[RuntimeException](
+      Pipeline.run(spark, empty, out1, "f", Pipeline.curationStages))
+    assert(Pipeline.curationStages.exists(s => e1.getMessage.contains(s"pipeline stage $s failed")))
+    assert(e1.getCause != null && e1.getCause.getMessage.contains("documents.parquet"))
+    assertClean(out1)
+    // Documents but no embeddings: p21_lloyds fails at once while
+    // dd_decisions is still running jobs, which are cancelled.
+    val docsOnly = Files.createTempDirectory("graft_pipeline_noemb").toString
+    spark.read.parquet(s"$sfDir/documents.parquet").write.parquet(s"$docsOnly/documents.parquet")
+    val out2 = Files.createTempDirectory("graft_pipeline_fail2").toString
+    val e2 = intercept[RuntimeException](
+      Pipeline.run(spark, docsOnly, out2, "f", Seq("dd_decisions", "p21_lloyds")))
+    assert(e2.getMessage.contains("pipeline stage p21_lloyds failed"))
+    assert(!new java.io.File(s"$out2/f/dd_decisions").exists,
+      "the sibling's job group was not cancelled")
+    assertClean(out2)
   }
 
   test("incremental re-run skips every unchanged stage; non-incremental re-runs") {

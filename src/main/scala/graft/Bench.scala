@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR.
   *
@@ -15,38 +14,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Object-agg partial phases (CollectBounded, collect_list) fall
-      // back to SORT-BASED aggregation after only 128 distinct keys by
-      // default — on a posting-list aggregation that is a full sort of
-      // the postings (measured 1.45× on dd_ngram_jaccard at 20× density).
-      // Safe to raise here: every object aggregate in this suite has
-      // BOUNDED per-key state (CollectBounded caps at maxSize+1; the
-      // collect_lists run on df-capped or per-order groups), so map-side
-      // hash-map memory is keys × a small constant. The raise is sized
-      // to the heap (SessionTuning) — a fixed 1M OOM'd an 8 GB driver
-      // at 100× before sort-fallback could trigger.
-      // HotSpot never JIT-compiles methods over 8000 bytecode bytes
-      // (-XX:DontCompileHugeMethods, on by default): a whole-stage-fused
-      // projection past that size runs in the BYTECODE INTERPRETER.
-      // Spark's default hugeMethodLimit (65535) happily keeps such
-      // methods; at 8000 it falls back to per-operator codegen, whose
-      // smaller methods JIT (rw_rewards 41.8->33.4 s, rw_report
-      // 35.7->29.0 s at the 100x corpus; queries under the cliff are
-      // unaffected).
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        SessionTuning.objectAggFallbackThreshold(cpus.toInt,
-          sys.env.get("SPARK_EXECUTOR_MEMORY")).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.suiteSession()
     // Scale knob passthrough: at stress densities the fixture's K = N/50
     // centroid rule makes the IVF family's N·K assignment quadratic —
     // see Similarity.MaxCentroidsKey. Unset = oracle-parity default.
@@ -180,14 +148,9 @@ object Bench {
     val bestScalars =
       if (runs == 1) ""
       else s""","runs":$runs,"best_total":${fmt(best.map(_._2).sum)}"""
-    def jstr(v: String): String =
-      "\"" + v.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     val errExtra =
       if (errors.isEmpty) ""
-      else s""","errors":${errors.map { case (k, m) => jstr(k) + ":" + jstr(m) }.mkString("{", ",", "}")}"""
+      else s""","errors":${errors.map { case (k, m) => Json.quote(k) + ":" + Json.quote(m) }.mkString("{", ",", "}")}"""
     // The graded per-query map goes LAST on the line and queries_best
     // moves to the FILE record only (r16 verdict task 2): the driver's
     // archive keeps a TAIL excerpt of stdout, and in r15 the

@@ -301,17 +301,11 @@ object Pipeline {
       signature: String): Unit = {
     val p = new Path(s"$artifactPath/_contract.json")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // Column names are data, not code: escape them (a name with a quote
+    // Column names are data, not code: quote them (a name with a quote
     // or backslash must not corrupt the contract document).
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => "\\u%04x".format(c.toInt)
-      case c => c.toString
-    }
     val json =
       s"""{"schema_version": "1", "signature": "$signature", "rows": $rows,
-         | "columns": [${columns.map(c => "\"" + esc(c) + "\"").mkString(", ")}]}""".stripMargin
+         | "columns": [${columns.map(Json.quote).mkString(", ")}]}""".stripMargin
     val out = fs.create(p, true)
     try out.write(json.getBytes("UTF-8")) finally out.close()
   }

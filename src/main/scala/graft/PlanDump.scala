@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, SortExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
@@ -15,12 +15,31 @@ import org.apache.spark.sql.execution.window.WindowExec
   * the scan / stay inside codegen", with PlanAuditSpec enforcing the hard
   * rules in CI.
   *
-  * Usage: runMain graft.PlanDump [sfDir] [outFile]
+  * Given an explain directory it also writes one `<name>.txt` per query
+  * with the full `.explain("formatted")` output (physical plan with
+  * operator details: PushedFilters, ReadSchema, join strategy + build
+  * side, exchange partitioning) — the reviewable evidence for plan-shape
+  * claims (Exchange counts, join strategy changes, pushdown) in the
+  * optimization records.
+  *
+  * Usage: runMain graft.PlanDump [sfDir] [outFile] [explainDir] [onlyCsv] [k=v,k=v | k=v;k=v]
+  *
+  * `onlyCsv` restricts both outputs to the named queries (empty = all).
+  * The conf argument sets session confs before planning — e.g.
+  * `spark.graft.broadcastMaxRows=0` shows the shuffle-fallback plan every
+  * size-gated broadcast site degrades to at corpus scale, which at
+  * sandbox SFs is otherwise invisible (the gate passes and the plan
+  * equals the hinted one).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
+    val explainDir = args.lift(2).map(Paths.get(_))
+    val only = args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .filter(_.nonEmpty)
+    val confs = args.lift(4).toSeq.flatMap(SessionTuning.parseSessionConf)
+    explainDir.foreach(Files.createDirectories(_))
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -33,13 +52,21 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
 
     def count(p: SparkPlan)(f: PartialFunction[SparkPlan, Unit]): Int =
       p.collect(f.andThen(_ => 1)).sum
+    val formatted = ExplainMode.fromString("formatted")
 
-    val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, q) =>
-      {
-        val p = q(spark, sfDir).queryExecution.executedPlan
+    val rows = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .map { case (name, q) =>
+        val qe = q(spark, sfDir).queryExecution
+        val p = qe.executedPlan
+        explainDir.foreach { dir =>
+          Files.write(dir.resolve(s"$name.txt"),
+            qe.explainString(formatted).getBytes("UTF-8"))
+        }
         val shuffles = count(p) { case _: ShuffleExchangeExec => }
         val bcasts = count(p) { case _: BroadcastExchangeExec => }
         val scans = p.collect { case f: FileSourceScanExec => f }
@@ -50,7 +77,6 @@ object PlanDump {
         val scanCols = scans.map(_.output.size).sum
         s"| $name | $shuffles | $bcasts | ${scans.size} ($pushed pushed, $scanCols cols) | $windows/$sorts | $wscg | |"
       }
-    }
 
     val header =
       s"""# PLANS — physical-plan shape per query (sf0.001, AQE off)
@@ -65,7 +91,8 @@ object PlanDump {
     val md = header + "\n| query | shuffles | bcasts | scans | win/sort | wscg | notes |\n" +
       "|---|---|---|---|---|---|---|\n" + rows.mkString("\n") + "\n"
     Files.write(Paths.get(out), md.getBytes("UTF-8"))
-    println(s"[plandump] wrote $out (${rows.size} queries)")
+    println(s"[plandump] wrote $out (${rows.size} queries)" +
+      explainDir.map(d => s" and ${rows.size} plans under $d").getOrElse(""))
     spark.stop()
   }
 }

@@ -1,72 +1,45 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Shared JSON string quoting for the hand-built record emitters
-  * (Verify, StreamEq): backslash, quote, and ALL control chars (<0x20)
-  * — a tab or CR in builder-authored SQL or an exception message would
-  * otherwise make the driver's json.load fail and silently zero the
-  * round's record. */
-private[graft] object Json {
-  def quote(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * throws is reported and the rest still run (Bench's policy: one broken
+  * query must not erase the others' outputs); every output and
+  * oracle_sql.json is written, then the process exits 1 if any query
+  * failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Bounded object-agg buffers everywhere in this suite — see the
-      // matching knob + rationale in Bench.scala.
-      // HotSpot never JIT-compiles methods over 8000 bytecode bytes
-      // (-XX:DontCompileHugeMethods, on by default): a whole-stage-fused
-      // projection past that size runs in the BYTECODE INTERPRETER.
-      // Spark's default hugeMethodLimit (65535) happily keeps such
-      // methods; at 8000 it falls back to per-operator codegen, whose
-      // smaller methods JIT (rw_rewards 41.8->33.4 s, rw_report
-      // 35.7->29.0 s at the 100x corpus; queries under the cliff are
-      // unaffected).
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        SessionTuning.objectAggFallbackThreshold(cpus.toInt,
-          sys.env.get("SPARK_EXECUTOR_MEMORY")).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.suiteSession()
     new java.io.File(outDir).mkdirs()
     // Optional subset (comma-separated names) for fast local iteration —
     // the driver runs the full set.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
+    val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, fn) =>
+        val err =
+          try {
+            fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/$name")
+            None
+          } catch { case e: Throwable =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            Some(name)
+          }
+        // Per-query scratch release — see the matching call in Bench.
+        operators.Sampling.releaseScratch()
+        err
       }
-      // Per-query scratch release — see the matching call in Bench.
-      operators.Sampling.releaseScratch()
-    }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.sorted.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

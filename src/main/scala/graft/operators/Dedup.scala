@@ -802,14 +802,14 @@ object Dedup {
     * aggregation, map-side pair explode — same scale shape as the other
     * blockers, never a posting self-join. */
   def ddSubstring(spark: SparkSession, sfDir: String): DataFrame =
-    ddSubstringPairs(spark, sfDir, MaxSpanDf)
+    ddSubstringOf(spark, Tables.documents(spark, sfDir), MaxSpanDf)
 
-  /** [[ddSubstring]] at an arbitrary span-df cap — the seam
-    * [[graft.SpanCapCurve]] sweeps to measure the cap-vs-recall curve
-    * behind the [[MaxSpanDf]] default (SPANCAP record in BASELINE.md).
-    * A pair (a, b) is found iff SOME shared span has df ≤ cap, so a
-    * larger cap finds a strict superset of pairs — recall against the
-    * converged-cap truth is a plain count ratio.
+  /** [[ddSubstring]] over any (doc_id, text) frame at an arbitrary span-df
+    * cap — the seam SubstringCollapseSpec differentials against the naive
+    * per-document formulation on a replica-dense fixture, and sweeps for
+    * the cap-vs-recall gate behind the [[MaxSpanDf]] default (SPANCAP
+    * record in BASELINE.md). A pair (a, b) is found iff SOME shared span
+    * has df ≤ cap, so a larger cap finds a superset of pairs.
     *
     * r16 rewrite: the blocker runs over DISTINCT texts (the
     * dd_simhash/dd_minhash replica collapse — shared spans are a
@@ -828,13 +828,6 @@ object Dedup {
     * r15 dd_simhash budgeting: closed-form pair count -> repartition
     * to ceil(bytes/128 MB), size-gated broadcasts, range-partitioned
     * presentation sort, [[Sampling.PresentationKey]] skip. */
-  private[graft] def ddSubstringPairs(spark: SparkSession, sfDir: String,
-      cap: Int): DataFrame =
-    ddSubstringOf(spark, Tables.documents(spark, sfDir), cap)
-
-  /** [[ddSubstringPairs]] over any (doc_id, text) frame — the seam
-    * SubstringCollapseSpec differentials against the naive per-document
-    * formulation on a replica-dense fixture. */
   private[graft] def ddSubstringOf(spark: SparkSession, docs: DataFrame,
       cap: Int): DataFrame =
     // wordShingles' short-text fallback emits the WHOLE document as one

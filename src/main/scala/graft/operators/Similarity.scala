@@ -541,12 +541,11 @@ object Similarity {
     * longs, so accumulation order cannot move a bit on either engine.
     * Dangling mass is dropped, not redistributed (a defined — and
     * documented — variant; both sides implement the same one). */
-  private[graft] def pageRank(nodes: DataFrame, edges: DataFrame,
-      iters: Int = PrIters): DataFrame = {
+  private[graft] def pageRank(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val flow = Sampling.trackScratch(edges.join(deg, "src").localCheckpoint(true))
     var ranks = nodes.select(col("vec_id"), lit(1000000L).as("r"))
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to PrIters) {
       val contrib = flow
         .join(ranks.withColumnRenamed("vec_id", "src"), Seq("src"))
         .select(col("dst"), expr("r div deg").as("c"))

@@ -99,8 +99,8 @@ object EventStreams {
     * — the emitted value would depend on micro-batch slicing; the sf1
     * gate proved the class wrong at q_topk_window). With an exact
     * integer accumulator the state-store value is a pure function of
-    * the window's row SET, so StreamEq can assert batch equality
-    * exactly instead of modulo cents. */
+    * the window's row SET, so StreamingSpec asserts batch equality on
+    * the real events table exactly instead of modulo cents. */
   def windowedCounts(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "10 minutes")
@@ -382,8 +382,8 @@ object EventStreams {
     * the sf0.1 replica-dense stress density (STREAMEQ r13 `ndp_curve`):
     * 256 → 81.1% recall, 512 → 95.2%, 1024 → 99.96%, 2048 → 100%, while
     * total state bytes barely move (700 KB → 820 KB — only the few hot
-    * exact-replica buckets ever bind the cap). 1024 clears StreamEq's
-    * ≥95% recall floor with margin at ~17% more state than the old 256;
+    * exact-replica buckets ever bind the cap). 1024 clears a ≥95% recall
+    * floor with margin at ~17% more state than the old 256;
     * worst-case per-bucket state stays bounded at 16 KB. Callers pass
     * [[nearDupPairs]]'s `bucketCap` parameter to retune per corpus. */
   val BucketCap = 1024

@@ -75,5 +75,27 @@ class BoilerArtifactSpec extends SparkSpec {
         (10L, 2L, 1L, 8L, uniqA),   // shared block scrubbed at ingest
         (11L, 1L, 0L, 8L, uniqB)))  // clean doc passes through
     } finally q.stop()
+
+    // The real documents streamed against the persisted heavy-set
+    // artifact equal the batch scrub on every column.
+    val path = tmp("boiler_stream")
+    TextOps.writeBoilerplateArtifact(spark, sfDir, path)
+    val batch = TextOps.txBoilerplate(spark, sfDir)
+      .as[(Long, Long, Long, Long, String)].collect().toSet
+    val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
+      .as[(Long, String)].collect().toSeq
+      .map { case (id, tx) => DocEvent(id, Timestamp.valueOf("2026-01-01 10:00:00"), tx) }
+    val real = MemoryStream[DocEvent]
+    val qr = EventStreams.boilerplateGate(real.toDS().toDF(), spark.read.parquet(path))
+      .writeStream.format("memory").queryName("boiler_gate_real")
+      .outputMode(OutputMode.Append).start()
+    try {
+      real.addData(docs)
+      qr.processAllAvailable()
+    } finally qr.stop()
+    val streamed = spark.table("boiler_gate_real")
+      .select($"doc_id", $"n_blocks", $"n_boiler", $"n_kept_tokens", $"text_clean")
+      .as[(Long, Long, Long, Long, String)].collect().toSet
+    assert(streamed == batch)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[SessionTuning.parseSessionConf]] — the one parser behind
-  * SPARK_GRAFT_SESSION_CONF (Bench) and ExplainDump's conf argument. */
+  * SPARK_GRAFT_SESSION_CONF (Bench) and PlanDump's conf argument. */
 class SessionConfSpec extends AnyFunSuite {
 
   test("a semicolon-separated string keeps commas inside values") {

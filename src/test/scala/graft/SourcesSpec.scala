@@ -110,6 +110,19 @@ class SourcesSpec extends SparkSpec {
       in.toDF().toDF("id", "s"), s"$dir/out", s"$dir/ckpt").start()
     q.awaitTermination(60000)
     assert(spark.read.parquet(s"$dir/out").count() == 2)
+
+    // The real events table: the drained files hold each event id
+    // exactly once, and a second drain with no new data appends nothing.
+    val events = Tables.events(spark, sfDir).select("event_id", "event_type")
+    val ids = events.select("event_id").as[Long].collect().toSeq.sorted
+    val real = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+    real.addData(events.as[(Long, String)].collect().toSeq)
+    for (_ <- 1 to 2) {
+      Sinks.streamingParquet(real.toDF().toDF("event_id", "event_type"),
+        s"$dir/real", s"$dir/real_ckpt").start().awaitTermination(60000)
+      assert(spark.read.parquet(s"$dir/real").select("event_id")
+        .as[Long].collect().toSeq.sorted == ids)
+    }
   }
 
   test("dedupUpsertParquet keeps first row per key across batches") {
@@ -132,6 +145,24 @@ class SourcesSpec extends SparkSpec {
     val rows = spark.read.parquet(s"$dir/out")
       .select("k", "s").as[(Long, String)].collect().toSet
     assert(rows == Set((1L, "first-1"), (2L, "first-2"), (3L, "first-3")))
+
+    // The real documents keyed by fingerprint, drained twice with half
+    // the rows redelivered, collapse to exactly dd_exact's keep set.
+    val batch = graft.operators.Dedup.ddExact(spark, sfDir)
+      .select("fp", "keep_id").as[(String, Long)].collect().toSet
+    val docs = Tables.documents(spark, sfDir)
+      .select(graft.functions.NativeExpressions.fingerprint(col("text")).as("fp"),
+        col("doc_id"))
+      .as[(String, Long)].collect().toSeq
+    val real = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
+    for (delivery <- Seq(docs, docs.take(docs.length / 2))) {
+      real.addData(delivery)
+      Sinks.dedupUpsertParquet(real.toDF().toDF("fp", "doc_id"),
+        s"$dir/real", s"$dir/real_ckpt", "fp", "doc_id").start().awaitTermination(60000)
+    }
+    val got = spark.read.parquet(s"$dir/real")
+      .select("fp", "doc_id").as[(String, Long)].collect().toSeq
+    assert(got.size == batch.size && got.toSet == batch)
   }
 
   test("dedupUpsertParquet recovers exactly-once from a kill before commit") {

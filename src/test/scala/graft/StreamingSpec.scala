@@ -2,10 +2,11 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.streaming.{EventStreams, SessionEvent}
+import graft.streaming.{DocEvent, EventStreams, SessionEvent}
 
 case class WEvent(ts: Timestamp, event_type: String, value: Double)
 case class DEvent(event_id: Long, ts: Timestamp, value: Double)
@@ -14,6 +15,27 @@ class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private def t(s: String) = Timestamp.valueOf(s)
+
+  /** Streams `rows` through `build` in `nBatches` micro-batches and
+    * returns the memory sink's table. */
+  private def drain[T: Encoder](rows: Seq[T], table: String, mode: OutputMode,
+      nBatches: Int = 2)(build: MemoryStream[T] => DataFrame): DataFrame = {
+    implicit val sql = spark.sqlContext
+    val in = MemoryStream[T]
+    val q = build(in).writeStream.format("memory").queryName(table)
+      .outputMode(mode).start()
+    try {
+      rows.grouped(math.max(1, rows.length / nBatches)).foreach { g =>
+        in.addData(g); q.processAllAvailable()
+      }
+    } finally q.stop()
+    spark.table(table)
+  }
+
+  /** The real documents table as stream events, one shared ts. */
+  private def realDocEvents(): Seq[DocEvent] =
+    Tables.documents(spark, sfDir).select("doc_id", "text").as[(Long, String)]
+      .collect().toSeq.map { case (id, tx) => DocEvent(id, t("2026-01-01 10:00:00"), tx) }
 
   test("windowedCounts aggregates tumbling hourly windows") {
     implicit val sql = spark.sqlContext
@@ -38,6 +60,22 @@ class StreamingSpec extends SparkSpec {
         (t("2026-01-01 10:00:00"), "click", 1L, 500L),
         (t("2026-01-01 11:00:00"), "view", 1L, 300L)))
     } finally q.stop()
+
+    // The real events table over two micro-batches equals the batch
+    // hourly aggregate exactly, long cents included, whatever the slicing.
+    import org.apache.spark.sql.functions._
+    val events = Tables.events(spark, sfDir)
+    val batch = events
+      .groupBy(window(col("ts"), "1 hour").getField("start").as("hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(round(col("value") * 100, 0).cast("long")).as("v"))
+      .as[(Timestamp, String, Long, Long)].collect().toSet
+    val real = events.select("ts", "event_type", "value").as[WEvent].collect().toSeq
+    val got = drain(real, "wc_real", OutputMode.Complete)(in =>
+        EventStreams.windowedCounts(in.toDF()))
+      .select("hour", "event_type", "n", "v")
+      .as[(Timestamp, String, Long, Long)].collect().toSet
+    assert(got.nonEmpty)
+    assert(got == batch)
   }
 
   test("dedupEvents drops redelivered event ids within the watermark") {
@@ -58,6 +96,17 @@ class StreamingSpec extends SparkSpec {
         .as[Long].collect().toSeq
       assert(ids.sorted == Seq(1L, 2L))
     } finally q.stop()
+
+    // Every real event delivered twice: exactly the distinct event ids
+    // survive, each once.
+    val events = Tables.events(spark, sfDir).select("event_id", "ts", "value")
+    val distinctIds = events.select("event_id").distinct().as[Long].collect().toSeq.sorted
+    val doubled = events.as[DEvent].collect().toSeq.flatMap(e => Seq(e, e))
+    val got = drain(doubled, "dedup_real", OutputMode.Append, nBatches = 1)(in =>
+        EventStreams.dedupEvents(in.toDF()))
+      .select("event_id").as[Long].collect().toSeq.sorted
+    assert(got.nonEmpty)
+    assert(got == distinctIds)
   }
 
   test("sessionize closes a session on the 30-minute gap") {
@@ -96,6 +145,18 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       assert(spark.table("docdedup").count() == 2)
     } finally q.stop()
+
+    // Each real doc plus an upper-cased copy (same normalized
+    // fingerprint): one survivor per distinct fingerprint.
+    val distinctFps = Tables.documents(spark, sfDir)
+      .select(graft.functions.NativeExpressions.fingerprint($"text"))
+      .distinct().count()
+    val doubled = realDocEvents().flatMap(d =>
+      Seq(d, d.copy(text = d.text.toUpperCase(java.util.Locale.ROOT))))
+    val got = drain(doubled, "docdedup_real", OutputMode.Append, nBatches = 1)(in =>
+        EventStreams.dedupDocs(in.toDF()))
+      .count()
+    assert(got == distinctFps)
   }
 
   test("attributionJoin pairs purchases with in-window views of the same user") {
@@ -120,6 +181,44 @@ class StreamingSpec extends SparkSpec {
         .as[(Long, Double)].collect().toSet
       assert(rows == Set((1L, 9.99)))
     } finally q.stop()
+
+    // The real events table: the streamed join, closed by two watermark
+    // sentinels, equals the batch 30-minute interval join as a multiset.
+    import org.apache.spark.sql.functions._
+    val events = Tables.events(spark, sfDir)
+    def side(tpe: String) = events.filter(col("event_type") === tpe)
+      .select(col("user_id"), col("ts"), col("value"))
+    val (v, p) = (side("view"), side("purchase"))
+    val batch = v.alias("v").join(p.alias("p"),
+        expr("""v.user_id = p.user_id AND
+                p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 30 MINUTES"""))
+      .select(col("v.user_id"), col("v.ts"), col("p.ts"),
+        round(col("p.value") * 100, 0).cast("long"))
+      .as[(Long, Timestamp, Timestamp, Long)].collect().toSeq.sorted
+    val inV = MemoryStream[SessionEvent]
+    val inP = MemoryStream[SessionEvent]
+    val qr = EventStreams.attributionJoin(inV.toDF(), inP.toDF())
+      .writeStream.format("memory").queryName("attr_real")
+      .outputMode(OutputMode.Append).start()
+    try {
+      inV.addData(v.as[SessionEvent].collect().toSeq)
+      inP.addData(p.as[SessionEvent].collect().toSeq)
+      qr.processAllAvailable()
+      // each sentinel pair pushes both watermarks a day further, past
+      // every real interval's end
+      val maxTs = events.agg(max(col("ts"))).as[Timestamp].head().getTime
+      for (day <- 1 to 2) {
+        val s = SessionEvent(-1L, new Timestamp(maxTs + day * 86400000L), 0.0)
+        inV.addData(s); inP.addData(s)
+        qr.processAllAvailable()
+      }
+    } finally qr.stop()
+    val got = spark.table("attr_real").filter(col("user_id") >= 0)
+      .select(col("user_id"), col("view_ts"), col("purchase_ts"),
+        round(col("purchase_value") * 100, 0).cast("long"))
+      .as[(Long, Timestamp, Timestamp, Long)].collect().toSeq.sorted
+    assert(batch.nonEmpty)
+    assert(got == batch)
   }
 
   test("sessionize extends a session backwards for late-in-watermark events") {
@@ -329,7 +428,6 @@ class StreamingSpec extends SparkSpec {
   test("streaming nearDupPairs finds the same pair set as batch dd_simhash") {
     implicit val sql = spark.sqlContext
     import org.apache.spark.sql.functions._
-    import graft.streaming.{DocEvent, NearDupPair}
 
     // Batch truth: (id_a, id_b, hamming) pair set from the banded join.
     val batch = graft.operators.Dedup.ddSimhash(spark, sfDir)
@@ -356,12 +454,20 @@ class StreamingSpec extends SparkSpec {
       assert(streamed == batch,
         s"streamed ${streamed.size} distinct pairs vs batch ${batch.size}")
     } finally q.stop()
+
+    // A binding per-bucket cap trades recall for bounded state, never
+    // precision: every pair it emits is a real batch pair.
+    val capped = drain(docs.toIndexedSeq, "neardup_capped", OutputMode.Append,
+        nBatches = 1)(in => EventStreams.nearDupPairs(in.toDS(), bucketCap = 2).toDF())
+      .select("id_a", "id_b", "hamming")
+      .as[(Long, Long, Long)].collect().toSet
+    assert(capped.nonEmpty && capped.subsetOf(batch) && capped.size < batch.size,
+      s"capped ${capped.size} pairs vs batch ${batch.size}")
   }
 
   test("streaming packSequences matches batch tx_pack across micro-batches") {
     implicit val sql = spark.sqlContext
     import org.apache.spark.sql.functions._
-    import graft.streaming.DocEvent
 
     val batch = graft.operators.TextOps.txPack(spark, sfDir)
       .select("doc_id", "n_tokens", "seq_id")
@@ -455,7 +561,6 @@ class StreamingSpec extends SparkSpec {
   test("streaming qualityGate matches batch tx_gopher over the real documents table") {
     implicit val sql = spark.sqlContext
     import org.apache.spark.sql.functions._
-    import graft.streaming.DocEvent
     val batch = graft.operators.Curation.txGopher(spark, sfDir)
       .select("doc_id", "fail_mask", "keep")
       .as[(Long, Long, Long)].collect().toSet
@@ -480,7 +585,6 @@ class StreamingSpec extends SparkSpec {
   test("streaming qualityClassifierGate matches batch tx_quality_classifier") {
     implicit val sql = spark.sqlContext
     import org.apache.spark.sql.functions._
-    import graft.streaming.DocEvent
     val batch = graft.operators.Curation.txQualityClassifier(spark, sfDir)
       .select("doc_id", "logit_micro", "clf_keep")
       .as[(Long, Long, Long)].collect().toSet
@@ -505,7 +609,6 @@ class StreamingSpec extends SparkSpec {
   test("streaming promptConstraintGate matches batch rw_prompt_parse on the real prompts") {
     implicit val sql = spark.sqlContext
     import org.apache.spark.sql.functions._
-    import graft.streaming.DocEvent
     val batch = graft.operators.Rewards.rwPromptParse(spark, sfDir)
       .select("doc_id", "structure_req", "topic", "tone_req", "length_req", "emoji_req")
       .as[(Long, String, String, String, String, String)].collect().toSeq.sorted
@@ -530,11 +633,13 @@ class StreamingSpec extends SparkSpec {
   test("streaming piiGate matches batch piiProject on PII-bearing docs") {
     implicit val sql = spark.sqlContext
     import org.apache.spark.sql.functions._
-    import graft.streaming.DocEvent
+    // PII-bearing fixtures (the synthetic corpus is pattern-clean, so
+    // they keep the comparison non-vacuous) plus every real doc
     val texts = Seq(
-      (1L, "mail jane.doe@example.com or visit https://x.io/a"),
-      (2L, "call +1 555-867-5309 from 10.0.0.1"),
-      (3L, "nothing sensitive here at all"))
+      (1000001L, "mail jane.doe@example.com or visit https://x.io/a"),
+      (1000002L, "call +1 555-867-5309 from 10.0.0.1"),
+      (1000003L, "nothing sensitive here at all")) ++
+      Tables.documents(spark, sfDir).select("doc_id", "text").as[(Long, String)].collect()
     val batch = graft.operators.TextOps.piiProject(texts.toDF("doc_id", "text"))
       .select("doc_id", "n_url", "n_email", "n_ip", "n_phone", "n_pii", "red_fp")
       .as[(Long, Long, Long, Long, Long, Long, String)].collect().toSet
@@ -556,7 +661,6 @@ class StreamingSpec extends SparkSpec {
   test("stream-built CMS counters equal the batch sketch (addition commutes)") {
     implicit val sql = spark.sqlContext
     import org.apache.spark.sql.functions._
-    import graft.streaming.DocEvent
     val batch1 = Seq(DocEvent(1L, t("2026-01-01 10:00:00"), "hot hot cold warm"),
       DocEvent(2L, t("2026-01-01 10:00:01"), "hot mild mild"))
     val batch2 = Seq(DocEvent(3L, t("2026-01-01 10:00:02"), "hot cold cold breeze"))
@@ -579,12 +683,21 @@ class StreamingSpec extends SparkSpec {
       assert(streamed.size <= graft.operators.TextOps.CmsDepth *
         graft.operators.TextOps.CmsWidth)
     } finally q.stop()
+
+    // The real documents table over three micro-batches.
+    val real = realDocEvents()
+    val realExpected = EventStreams.cmsCounters(real.toDS().toDF())
+      .as[(Int, Long, Long)].collect().toSet
+    val realStreamed = drain(real, "cms_real", OutputMode.Complete, nBatches = 3)(in =>
+        EventStreams.cmsCounters(in.toDS().toDF()))
+      .as[(Int, Long, Long)].collect().toSet
+    assert(realStreamed.nonEmpty)
+    assert(realStreamed == realExpected)
   }
 
   test("contaminationGate flags benchmark-overlapping docs statelessly") {
     implicit val sql = spark.sqlContext
     import org.apache.spark.sql.functions._
-    import graft.streaming.DocEvent
     val bench = Seq("alpha beta gamma delta epsilon zeta eta").toDF("text")
     val in = MemoryStream[DocEvent]
     val q = EventStreams.contaminationGate(in.toDS().toDF(), bench)
@@ -601,6 +714,18 @@ class StreamingSpec extends SparkSpec {
       assert(got(1L) == 2L, s"doc 1 should share two 5-grams, got $got")
       assert(got(2L) == 0L)
     } finally q.stop()
+
+    // The real documents streamed against every 25th doc (the frame
+    // tx_contamination blocks against) equal the same gate batch-driven.
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val realBench = docs.filter(col("doc_id") % 25 === 0).select("text")
+    val batch = EventStreams.contaminationGate(docs, realBench)
+      .select("doc_id", "n_shared").as[(Long, Long)].collect().toSet
+    val streamed = drain(realDocEvents(), "contam_real", OutputMode.Append)(in =>
+        EventStreams.contaminationGate(in.toDS().toDF(), realBench))
+      .select("doc_id", "n_shared").as[(Long, Long)].collect().toSet
+    assert(batch.exists(_._2 > 0L))
+    assert(streamed == batch)
   }
 
   test("sessionize emits via event-time timeout once the watermark passes") {

@@ -41,7 +41,9 @@ class SubstringCollapseSpec extends SparkSpec {
   private def words(n: Int, seed: String): String =
     (0 until n).map(i => s"$seed$i").mkString(" ")
 
-  test("collapsed form equals the per-document form on a replica-dense fixture") {
+  /** Replica-dense dd_substring fixture: verbatim groups, partial
+    * overlaps, intra-doc repeated spans, a sub-length doc. */
+  private def spanFixture: DataFrame = {
     val base = words(20, "a")                  // 20 tokens, 9 spans
     val overlap = words(15, "a") + " " + words(10, "z") // shares a-prefix spans
     val short = words(8, "a")                  // sub-length: no spans at all
@@ -58,7 +60,11 @@ class SubstringCollapseSpec extends SparkSpec {
     // weights must multiply occurrences, not presence
     val rep = words(12, "r") + " x " + words(12, "r").split(" ").take(11).mkString(" ")
     rows += ((50L, rep)); rows += ((51L, rep))
-    val docs = rows.result().toDF("doc_id", "text")
+    rows.result().toDF("doc_id", "text")
+  }
+
+  test("collapsed form equals the per-document form on a replica-dense fixture") {
+    val docs = spanFixture
     for (cap <- Seq(3, 5, 100)) {
       val want = reference(docs, cap)
       val got = collapsed(docs, cap)
@@ -73,6 +79,33 @@ class SubstringCollapseSpec extends SparkSpec {
     val got = collapsed(docs, Dedup.MaxSpanDf)
     assert(got == want)
     assert(got.nonEmpty, "fixture produced no pairs — differential is vacuous")
+  }
+
+  test("span-df caps nest, and the default cap finds every converged pair") {
+    // A pair is found iff SOME shared span has df <= cap, so pair sets
+    // grow with the cap; a cap at the largest span df is the converged
+    // truth, and MaxSpanDf must already find all of it (the SPANCAP
+    // records measured 100% recall at sf0.1 and at the 10x replica corpus).
+    for ((label, docs) <- Seq("fixture" -> spanFixture,
+        "sf0.001" -> Tables.documents(spark, sfDir))) {
+      val maxDf = docs
+        .select(explode(NativeExpressions.wordShingles(col("text"), Dedup.SubstringL)).as("s"))
+        .groupBy("s").count().agg(max("count")).as[Long].head().toInt
+      val caps = (Seq(1, 2, Dedup.MaxSpanDf, maxDf) ++
+        Seq(Dedup.MaxSpanDf, maxDf).map(_ / 2)).distinct.sorted
+      val pairs = caps.map(cap => cap -> collapsed(docs, cap).map(p => (p._1, p._2)))
+      pairs.sliding(2).foreach { case Seq((lo, a), (hi, b)) =>
+        assert(a.subsetOf(b), s"$label: cap $lo found pairs cap $hi lost: ${a -- b}")
+      }
+      val byCap = pairs.toMap
+      val truth = byCap(maxDf)
+      assert(truth.nonEmpty, s"$label: no pairs — the recall gate is vacuous")
+      assert(byCap(Dedup.MaxSpanDf) == truth,
+        s"$label: MaxSpanDf misses ${(truth -- byCap(Dedup.MaxSpanDf)).size} of ${truth.size} pairs")
+      if (label == "fixture")
+        assert(byCap(1).size < truth.size && byCap(2).size < truth.size,
+          "a cap of 1-2 must find fewer pairs on the replica-dense fixture")
+    }
   }
 
   test("dd_substring pre-ranged presentation keeps the global order and pair set") {

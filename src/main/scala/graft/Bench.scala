@@ -14,6 +14,8 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Optional subset (comma-separated names) for stress/spot runs.
+    val only = sys.env.get("SPARK_GRAFT_ONLY").flatMap(SparkEntry.queryNames)
     val spark = SessionTuning.suiteSession()
     // Scale knob passthrough: at stress densities the fixture's K = N/50
     // centroid rule makes the IVF family's N·K assignment quadratic —
@@ -58,9 +60,6 @@ object Bench {
         .groupBy("o_orderpriority").count())
     }
 
-    // Optional subset (comma-separated names) for stress/spot runs.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // Build-before-consume ordering: ss_knn_graph OWNS the session knn
     // edge cache's probe+score build (the one inherently super-linear
     // step in the suite); alphabetical order ran ss_centrality first,

@@ -40,18 +40,15 @@ import graft.operators.Curation
   * stages share the cores through Spark's scheduler: most of a chain's
   * jobs are one or two tasks, so one stage alone leaves executors idle.
   *
-  * Concurrency audit. Concurrent stage builders meet only in the
-  * operators' `ConcurrentHashMap` session caches (Dedup's frameCache,
-  * pairFrameCache and verifiedPieceCache; Similarity's knnEdgeCache,
-  * centTableCache and lloydsVmCache). `computeIfAbsent` locks the key's
-  * hash bin while it builds, so concurrent builds of one key wait for the
-  * first (one build per key, as wanted), and builds of different keys
-  * that share a bin serialize. A build that nests into another map can
-  * deadlock only through a cycle of maps; the one nesting is
-  * centTableCache → lloydsVmCache (the Lloyd's trainers read the
-  * checkpointed vector table), which has none, and no build nests into
-  * its own map (dependencies are resolved before the closure — Dedup's
-  * "Recursive update" note). Per-query scratch registration
+  * Concurrency audit. Concurrent stage builders meet only in the one
+  * operator session cache, `operators.SessionCache`. Its builds run in
+  * the calling thread outside the map, behind a once-cell per key:
+  * concurrent builds of one key wait for the first (one build per key,
+  * as wanted), builds of different keys never wait on each other, and
+  * a build may read other entries (fpGroups reads the simhash table,
+  * the centroid tables read the Lloyd's vector table). The one
+  * remaining deadlock is a cycle of builds, each waiting on the next;
+  * the entries' dependencies form none. Per-query scratch registration
   * (`Sampling.trackScratch`) and the checkpoint row-count memo are
   * concurrent collections; no operator registers views or functions in
   * the session. The operator objects initialize on the calling thread
@@ -347,13 +344,8 @@ object Pipeline {
       .getOrElse(defaultStages)
     val incremental = sys.env.get("SPARK_GRAFT_INCREMENTAL").contains("1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = SessionTuning.baseSession(cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val manifest = run(spark, sfDir, outDir, runId, stages, incremental).collect()

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, SortExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.WindowExec
@@ -36,20 +35,14 @@ object PlanDump {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
     val explainDir = args.lift(2).map(Paths.get(_))
-    val only = args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
+    val only = args.lift(3).flatMap(SparkEntry.queryNames)
     val confs = args.lift(4).toSeq.flatMap(SessionTuning.parseSessionConf)
     explainDir.foreach(Files.createDirectories(_))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = SessionTuning.baseSession("4")
       // AQE off: executedPlan is then the concrete plan (exchanges +
       // codegen spans inserted), not an adaptive wrapper whose children
       // only materialize during execution.
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     confs.foreach { case (k, v) => spark.conf.set(k, v) }

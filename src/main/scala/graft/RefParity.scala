@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Reference-output parity dump: runs the JSONL-sourced pipeline forms
   * (sources.PostsJsonl → DocPipeline.engagementTiers / labelPosts) over a
   * raw posts JSONL — the reference's own input format — and writes both
@@ -18,12 +16,7 @@ import org.apache.spark.sql.SparkSession
 object RefParity {
   def main(args: Array[String]): Unit = {
     val Array(jsonl, outDir) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionTuning.baseSession("4").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val posts = sources.PostsJsonl.posts(spark, jsonl)
     operators.DocPipeline.engagementTiers(posts)

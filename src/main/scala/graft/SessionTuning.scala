@@ -2,14 +2,27 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-level tuning: the query-suite session the Bench and Verify
-  * mains share, and the engine's session-knob registry.
+/** Session-level tuning: the base settings every graft session starts
+  * from, the query-suite session the Bench and Verify mains share, and
+  * the engine's session-knob registry.
   */
 object SessionTuning {
 
+  /** The one session builder: `local[cpus]` with one shuffle partition
+    * per core, UTC, nanos-as-long parquet timestamps and no UI. Every
+    * main and the specs' shared session start here and add their own
+    * settings. */
+  def baseSession(cpus: String): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+
   /** The local session the query-suite mains (Bench, Verify) run in:
-    * `local[SPARK_GRAFT_CPUS]` (default 4) with one shuffle partition per
-    * core, AQE on, UTC, and two suite-wide tunings.
+    * [[baseSession]] at `SPARK_GRAFT_CPUS` cores (default 4), AQE on,
+    * and two suite-wide tunings.
     *
     * Object-agg partial phases (CollectBounded, collect_list) fall back
     * to SORT-BASED aggregation after only 128 distinct keys by default —
@@ -31,17 +44,12 @@ object SessionTuning {
     * corpus; queries under the cliff are unaffected). */
   def suiteSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = baseSession(cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.codegen.hugeMethodLimit", "8000")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         objectAggFallbackThreshold(cpus.toInt,
           sys.env.get("SPARK_EXECUTOR_MEMORY")).toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -51,8 +59,12 @@ object SessionTuning {
     * library reads, with its deployment meaning. README.md's "Cluster
     * deployment" section documents each (KnobRegistrySpec pins the two
     * lists and the code constants together so a new knob cannot ship
-    * undocumented). */
-  val Knobs: Map[String, String] = Map(
+    * undocumented).
+    *
+    * This and the two tables below are lazy: naming a key constant
+    * initializes its operator object, which must not happen ahead of a
+    * [[baseSession]] caller's session start. */
+  lazy val Knobs: Map[String, String] = Map(
     graft.operators.Sampling.PresentationKey ->
       ("\"off\" disables the presentation checkpoint+ORDER BY on every " +
         "operator output — REQUIRED on a real cluster run feeding a " +
@@ -100,7 +112,7 @@ object SessionTuning {
     * knob changes only the plan's shape. `graft.Pipeline` hashes their
     * session values into the stage signatures, so an incremental re-run
     * after flipping one re-runs the stages it can change. */
-  val ResultKnobs: Seq[String] = Seq(
+  lazy val ResultKnobs: Seq[String] = Seq(
     graft.functions.Quantiles.ApproxKey,
     graft.operators.Similarity.MaxCentroidsKey,
     graft.operators.Curation.ClassifierGateKey)
@@ -109,7 +121,7 @@ object SessionTuning {
     * operator only (KnobRegistrySpec pins the classifier gate's one
     * read, in cur_verdict's composition). A key not listed here reaches
     * call sites across the suite and counts for every stage. */
-  private val ResultKnobStages: Map[String, Set[String]] = Map(
+  private lazy val ResultKnobStages: Map[String, Set[String]] = Map(
     graft.operators.Curation.ClassifierGateKey -> Set("cur_verdict"))
 
   /** The [[ResultKnobs]] whose values can change `stage`'s result. */

@@ -22,6 +22,17 @@ object SparkEntry {
       Correlation.queries ++ graft.multimodal.Manifest.queries ++ CorpusReport.queries ++
       Curation.queries ++ Entities.queries ++ Validation.queries
 
+  /** The query subset a comma-separated list names (Bench and Verify's
+    * `SPARK_GRAFT_ONLY`, PlanDump's subset argument); None, meaning every
+    * query, for an empty list. Throws naming every entry that is not a
+    * [[queries]] key, so a typo cannot narrow a run unnoticed. */
+  def queryNames(csv: String): Option[Set[String]] = {
+    val names = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- queries.keySet
+    require(unknown.isEmpty, s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+    Some(names).filter(_.nonEmpty)
+  }
+
   def oracleSql: Map[String, String] =
     analyticsOracle ++ DocPipeline.oracle ++ TextOps.oracle ++ Dedup.oracle ++
       Similarity.oracle ++ Annotations.oracle ++ Style.oracle ++ Rewards.oracle ++

@@ -10,12 +10,11 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = SessionTuning.suiteSession()
-    new java.io.File(outDir).mkdirs()
     // Optional subset (comma-separated names) for fast local iteration —
     // the driver runs the full set.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = sys.env.get("SPARK_GRAFT_ONLY").flatMap(SparkEntry.queryNames)
+    val spark = SessionTuning.suiteSession()
+    new java.io.File(outDir).mkdirs()
     val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .flatMap { case (name, fn) =>

@@ -217,22 +217,21 @@ object Dedup {
   /** The three compact minhash frames: raw-text identity groups
     * (rep_id, ids), verified rep-level cross pairs (id_a, id_b, j_ppm)
     * and verified within-group rows (ids, j_ppm). `cache = true`
-    * session-caches each (checkpoint-backed); the verified two are
-    * built in ONE pass sharing the shingle source and cached as a pair
-    * ([[verifiedPieceCache]] — two separate computeIfAbsent closures
-    * would shingle the corpus twice). */
+    * session-caches each (checkpoint-backed, [[SessionCache]]); the
+    * verified two are built in ONE pass sharing the shingle source and
+    * cached as a pair (two separate entries would shingle the corpus
+    * twice). */
   private def minhashPieces(spark: SparkSession, sfDir: String, cache: Boolean)
       : (DataFrame, DataFrame, DataFrame) = {
     val groups =
-      if (cache) cachedFrame(spark, sfDir, "minhash.groups")(minhashGroups(spark, sfDir))
+      if (cache)
+        SessionCache.get(spark, sfDir, "Dedup.minhash.groups")(minhashGroups(spark, sfDir))
       else minhashGroups(spark, sfDir)
     val (repPairs, withinGroups) =
-      if (cache) {
-        verifiedPieceCache.keySet.removeIf(_._1.sparkContext.isStopped)
-        verifiedPieceCache.computeIfAbsent(
-          (spark, sfDir, "minhash", spark.conf.getOption(BloomMinScanBytesKey)),
-          _ => minhashVerified(spark, sfDir, groups, materialize = true))
-      } else minhashVerified(spark, sfDir, groups, materialize = false)
+      if (cache)
+        SessionCache.get(spark, sfDir, "Dedup.minhash.verified")(
+          minhashVerified(spark, sfDir, groups, materialize = true))
+      else minhashVerified(spark, sfDir, groups, materialize = false)
     (groups, repPairs, withinGroups)
   }
 
@@ -279,10 +278,6 @@ object Dedup {
         lr.rdd.unpersist(blocking = false)
       case _ =>
     }
-
-  private val verifiedPieceCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String, Option[String]), (DataFrame, DataFrame)]()
 
   private def minhashGroups(spark: SparkSession, sfDir: String): DataFrame = {
     // raw-text identity groups (md5 of the text itself — NOT the
@@ -407,27 +402,6 @@ object Dedup {
     within.unionByName(cross)
   }
 
-  /** Session cache of a verified near-dup PAIR frame — now used only by
-    * dd_ngram_jaccard, whose pairs come straight off the df-capped
-    * posting index with no member expansion (the df cap already bounds
-    * the output, so the frame is safe to materialize; the
-    * expansion-bearing methods cache COMPACT frames instead — see
-    * [[ddMinhashLsh]] / [[ddSimhash]]). Keyed per session (dead
-    * sessions evicted on access), corpus dir, method tag, and the
-    * bloom-prune conf (a pruned build and an unpruned one have
-    * identical VALUES, but the key keeps plan-audit runs honest about
-    * which shape they measure). */
-  private val pairFrameCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String, Option[String]), DataFrame]()
-
-  private def cachedPairs(spark: SparkSession, sfDir: String, tag: String)
-      (build: => DataFrame): DataFrame = {
-    pairFrameCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    pairFrameCache.computeIfAbsent(
-      (spark, sfDir, tag, spark.conf.getOption(BloomMinScanBytesKey)),
-      _ => build.localCheckpoint(true))
-  }
-
   /** dd_ngram_jaccard: exact shingle-Jaccard pairs via the inverted index
     * with a stop-shingle df cap bounding the worst-case fan-in at scale.
     *
@@ -448,12 +422,18 @@ object Dedup {
     * partial aggregate, the shuffle, and the final merge, and evaluates
     * overflowing keys (stop shingles) to NULL — one scan, one shuffle to
     * the pair stage, hot-key cost O(cap) no matter how many documents
-    * share a boilerplate shingle. */
+    * share a boilerplate shingle.
+    *
+    * The verified PAIR frame is session-cached ([[SessionCache]]): its
+    * pairs come straight off the df-capped posting index with no member
+    * expansion (the df cap already bounds the output, so the frame is
+    * safe to materialize; the expansion-bearing methods cache COMPACT
+    * frames instead — see [[ddMinhashLsh]] / [[ddSimhash]]). */
   def ddNgramJaccard(spark: SparkSession, sfDir: String): DataFrame =
-    cachedPairs(spark, sfDir, "ngram") {
+    SessionCache.get(spark, sfDir, "Dedup.ngram") {
       // replica-collapsed blocker (r16) — the cached frame is the
       // thresholded compact output, sorted by the gate entry below
-      ddNgramJaccardOf(spark, Tables.documents(spark, sfDir))
+      ddNgramJaccardOf(spark, Tables.documents(spark, sfDir)).localCheckpoint(true)
     }.orderBy(col("id_a"), col("id_b"))
 
   /** [[ddNgramJaccard]] over any (doc_id, text) frame — the
@@ -511,7 +491,8 @@ object Dedup {
     // (ReplicaCollapseSpec differential); the signature checkpoint is
     // distinct-content-sized instead of corpus-sized, which also stops
     // this row leaning on executor storage the session caches share.
-    val groups = cachedFrame(spark, sfDir, "minhash.groups")(minhashGroups(spark, sfDir))
+    val groups =
+      SessionCache.get(spark, sfDir, "Dedup.minhash.groups")(minhashGroups(spark, sfDir))
     // same size-gated rep-scan hint as minhashVerified (groups is the
     // eager session checkpoint, so the gate's count is cheap)
     val repSig = Sampling.trackScratch(Tables.documents(spark, sfDir)
@@ -1289,7 +1270,7 @@ object Dedup {
     * dd_decisions / cur_verdict) — one fingerprint scan of the corpus
     * per session total. */
   private def simhashFp(spark: SparkSession, sfDir: String): DataFrame =
-    cachedFrame(spark, sfDir, "simhash.fp") {
+    SessionCache.get(spark, sfDir, "Dedup.simhash.fp") {
       // countedCheckpoint: the one-time materializing scan doubles as
       // the broadcast gate's corpus count, so per-consumer nDocs reads
       // are memo lookups, not jobs
@@ -1301,14 +1282,9 @@ object Dedup {
     * the band join and hamming verification run over DISTINCT
     * fingerprints only (identical texts collapse before blocking).
     * Session-cached; tiny. */
-  private def simhashFpEdges(spark: SparkSession, sfDir: String): DataFrame = {
-    // Dependency resolved BEFORE entering the cache closure: a nested
-    // computeIfAbsent on the same map throws "Recursive update" when
-    // the two keys collide into one hash bin (observed at sf0.001 but
-    // not sf0.01 — bin assignment depends on the key strings).
-    val fp = simhashFp(spark, sfDir)
-    cachedFrame(spark, sfDir, "simhash.fpEdges") {
-      val distinctFps = fp.select(col("fp")).distinct()
+  private def simhashFpEdges(spark: SparkSession, sfDir: String): DataFrame =
+    SessionCache.get(spark, sfDir, "Dedup.simhash.fpEdges") {
+      val distinctFps = simhashFp(spark, sfDir).select(col("fp")).distinct()
       val bandKeys = simhashBandKeys(col("fp"))
       val bands = distinctFps.select(col("fp"), explode(bandKeys).as("bk"))
       // hamming test lives in the join condition: failed candidates die
@@ -1323,7 +1299,6 @@ object Dedup {
         .distinct()
         .localCheckpoint(true)
     }
-  }
 
   /** dd_simhash_clusters: the dense-corpus form of dd_simhash — docs with
     * IDENTICAL fingerprints collapse to a keep-min-id representative
@@ -1437,57 +1412,34 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** Session cache for the COMPONENT-LABEL machinery shared by
-    * dd_components, dd_decisions and (via ddDecisions) cur_verdict —
-    * same house pattern and lifecycle as [[cachedPairs]], keyed
-    * (session, corpus, stage). Each consumer previously re-ran the
-    * fp-group aggregate, the band self-join and the full label-
-    * propagation loop (the three most expensive first-pass rows in the
-    * dd chain); the fixpoint is deterministic per corpus, so one build
-    * serves them all. Entries are materialized on construction:
-    * checkpoint-backed, or (the local component labels) a join of the
-    * fp-group checkpoint to a driver-built local relation. */
-  private val frameCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  private def cachedFrame(spark: SparkSession, sfDir: String, tag: String)
-      (build: => DataFrame): DataFrame = {
-    frameCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    frameCache.computeIfAbsent((spark, sfDir, tag), _ => build)
-  }
-
   /** (fp, rep_id, n_docs) per distinct simhash fingerprint, eagerly
     * checkpointed: the band self-join downstream has no CSE across its
     * two sides, so without this the simhash scan over the full corpus
     * runs twice more inside edge-building (and again in final joins).
-    * Session-cached ([[cachedFrame]]): dd_components, dd_decisions and
+    * Session-cached ([[SessionCache]]): dd_components, dd_decisions and
     * cur_verdict all start from this table. */
-  private[graft] def fpGroups(spark: SparkSession, sfDir: String): DataFrame = {
-    // dependency OUTSIDE the closure — see simhashFpEdges' note on
-    // nested computeIfAbsent ("Recursive update")
-    val fp = simhashFp(spark, sfDir)
-    cachedFrame(spark, sfDir, "fpGroups") {
-      fp.groupBy(col("fp"))
+  private[graft] def fpGroups(spark: SparkSession, sfDir: String): DataFrame =
+    SessionCache.get(spark, sfDir, "Dedup.fpGroups") {
+      simhashFp(spark, sfDir).groupBy(col("fp"))
         .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("n_docs"))
         .localCheckpoint(true)
     }
-  }
 
   /** (rep_id, component) over the rep near-dup graph. See
-    * [[ddComponents]] for the algorithm notes. Session-cached: the
-    * fixpoint is reused by every consumer. */
-  private def repComponents(spark: SparkSession, sfDir: String): DataFrame = {
-    // dependency OUTSIDE the closure — see simhashFpEdges' note on
-    // nested computeIfAbsent ("Recursive update")
-    val groups = fpGroups(spark, sfDir)
-    cachedFrame(spark, sfDir, "repComponents") {
-      repComponentsCore(groups)
+    * [[ddComponents]] for the algorithm notes. Session-cached
+    * ([[SessionCache]]): dd_components, dd_decisions and (via
+    * ddDecisions) cur_verdict share one deterministic fixpoint instead
+    * of each re-running the band self-join and the labelling. The
+    * entry is materialized on construction: checkpoint-backed, or (the
+    * local component labels) a join of the fp-group checkpoint to a
+    * driver-built local relation. */
+  private def repComponents(spark: SparkSession, sfDir: String): DataFrame =
+    SessionCache.get(spark, sfDir, "Dedup.repComponents") {
+      repComponentsCore(fpGroups(spark, sfDir))
     }
-  }
 
   // private[graft]: ComponentsSpec runs both shapes on one groups frame
-  // through this UNCACHED core (the session cache would serve the first
-  // build to both).
+  // through this UNCACHED core.
   private[graft] def repComponentsCore(groups: DataFrame): DataFrame = {
     val bandKeys = simhashBandKeys(col("fp"))
     val bands = groups.select(col("fp"), col("rep_id"), explode(bandKeys).as("bk"))

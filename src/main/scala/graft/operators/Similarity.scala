@@ -460,27 +460,21 @@ object Similarity {
     * IVF blocker's floor), and it is a GRAPH BUILD, not a query: every
     * consumer (this entry's presentation, [[ssCentrality]], repeated
     * bench passes) reads the same edge set. The edge table is therefore
-    * computed once per (session, corpus, centroid cap) via
-    * [[knnEdgeCache]] — the same house pattern as [[centTableCache]] —
-    * so within a session the family pays one build and every later
-    * consumer is linear in the edge count. Cross-session persistence is
-    * the [[writeKnnArtifact]] / [[ssCentralityFromArtifact]] split. */
+    * computed once per (session, corpus, knob values) via
+    * [[SessionCache]], so within a session the family pays one build
+    * and every later consumer is linear in the edge count.
+    * Cross-session persistence is the [[writeKnnArtifact]] /
+    * [[ssCentralityFromArtifact]] split. */
   def ssKnnGraph(spark: SparkSession, sfDir: String): DataFrame =
     knnEdges(spark, sfDir).orderBy(col("q_id"), col("rank"))
 
-  /** Session cache of the k-NN edge table (q_id, rank, vec_id, cos_ppm),
-    * eagerly checkpointed — |corpus|·[[TopK]] rows of four longs, far
-    * smaller than the probe fan-in it saves. Keyed like
-    * [[centTableCache]]: per session (dead sessions evicted on access),
-    * per corpus dir, per [[MaxCentroidsKey]] cap (a capped build must
-    * never serve an uncapped caller). */
-  private val knnEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Option[String]), DataFrame]()
-
-  private def knnEdges(spark: SparkSession, sfDir: String): DataFrame = {
-    knnEdgeCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    knnEdgeCache.computeIfAbsent(
-        (spark, sfDir, spark.conf.getOption(MaxCentroidsKey)), _ => {
+  /** Session cache ([[SessionCache]]) of the k-NN edge table (q_id,
+    * rank, vec_id, cos_ppm), eagerly checkpointed — |corpus|·[[TopK]]
+    * rows of four longs, far smaller than the probe fan-in it saves.
+    * The [[MaxCentroidsKey]] cap is a knob, so a capped build never
+    * serves an uncapped caller. */
+  private def knnEdges(spark: SparkSession, sfDir: String): DataFrame =
+    SessionCache.get(spark, sfDir, "Similarity.knnEdges") {
       // Per-cluster native top-k (r15): the r14 shuffle join materialized
       // every (query, bucket-member) candidate as a joined row carrying
       // both vector payloads — 312M rows / 200.9 s at the 100× corpus,
@@ -508,8 +502,7 @@ object Similarity {
       topKByUnsorted(partial, TopK, col("cos"),
           round(col("cos") * 1000000, 0).cast("long").as("cos_ppm"))
         .localCheckpoint(true)
-    })
-  }
+    }
 
   /** The r14 join-form edge build — differential reference ONLY
     * (KnnKernelSpec pins the kernel build against it row-for-row). */
@@ -975,19 +968,15 @@ object Similarity {
     * (vec_id, label, v) projection once per (session, corpus); at
     * 100 TB the same role is a persisted micro-fixed parquet artifact
     * next to the centroid artifact (write once, every chain consumer
-    * reads columnar). Keyed like [[centTableCache]]; NOT tracked as
+    * reads columnar). A [[SessionCache]] entry; NOT tracked as
     * scratch — it is a session cache, alive across queries. */
-  private val lloydsVmCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private def lloydsVm(spark: SparkSession, sfDir: String): DataFrame = {
-    lloydsVmCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    lloydsVmCache.computeIfAbsent((spark, sfDir), _ =>
+  private def lloydsVm(spark: SparkSession, sfDir: String): DataFrame =
+    SessionCache.get(spark, sfDir, "Similarity.lloydsVm") {
       Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("label"),
           transform(col("embedding"), x => round(x.cast("double") * 1000000d, 0)).as("v"))
-        .localCheckpoint(true))
-  }
+        .localCheckpoint(true)
+    }
 
   /** Seed modulus of the default Lloyd's chain: every [[LloydsSeedMod]]-th
     * vector seeds a centroid (k grows with SF, stays broadcastable). */
@@ -1055,46 +1044,33 @@ object Similarity {
     * the one-row array from those materialized blocks (a k-row keyless
     * aggregate — the re-agg is microseconds and keeps every consumer's
     * broadcast side a visible `keys=[]` aggregate, the single-row
-    * contract PlanAuditSpec pins). Entries are keyed by session so a
+    * contract PlanAuditSpec pins). A [[SessionCache]] entry, so a
     * restarted session retrains instead of touching another session's
-    * dead blocks; the map stays tiny (one entry per corpus version ×
-    * seed mod actually analyzed). Cross-session persistence is the
+    * dead blocks, and a run under the [[MaxCentroidsKey]] cap never
+    * serves an uncapped caller. Cross-session persistence is the
     * [[writeCentroidArtifact]] / [[assignFromArtifact]] split. */
-  private val centTableCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int, Option[String]), DataFrame]()
-
   private def lloydsCentArr(spark: SparkSession, sfDir: String,
-      seedMod: Int = LloydsSeedMod): DataFrame = {
-    // Dead-session entries pin the stopped session and its checkpoint
-    // blocks for the JVM lifetime — evict them whenever the cache is
-    // consulted (the map holds a handful of keys; the sweep is free).
-    // The MaxCentroidsKey cap is part of the key: a capped training run
-    // must never serve a later uncapped caller in the same session.
-    centTableCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    centTableCache.computeIfAbsent(
-        (spark, sfDir, seedMod, spark.conf.getOption(MaxCentroidsKey)), _ =>
+      seedMod: Int = LloydsSeedMod): DataFrame =
+    SessionCache.get(spark, sfDir, s"Similarity.cent.$seedMod")(
       lloydsCentroids(spark, sfDir, seedMod).localCheckpoint(true))
       .agg(collect_list(struct(col("c_id"), col("cv"))).as("cents"))
-  }
 
   /** Trained FIXED-k centroids as the one-row broadcastable (c_id, cv)
     * array — micro-fixed-point, [[lloydsIterate]] from the first k
     * vectors as seeds (c_id = vec_id 0..k-1: on the synthetic sphere as
     * arbitrary as any deterministic pick, zero extra passes, and a
-    * one-predicate SQL mirror). Cached in [[centTableCache]] under
-    * seedMod = -k: the fixed-k chains ignore the seed-mod fixture rule
-    * AND the [[MaxCentroidsKey]] cap — k is already a constant, so the
-    * N·K assignment is linear by construction. */
-  private[graft] def fixedKCentArr(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
-    centTableCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    centTableCache.computeIfAbsent((spark, sfDir, -k, None), _ => {
+    * one-predicate SQL mirror). Cached like [[lloydsCentArr]], tagged
+    * by k: the fixed-k chains ignore the seed-mod fixture rule AND the
+    * [[MaxCentroidsKey]] cap — k is already a constant, so the N·K
+    * assignment is linear by construction. */
+  private[graft] def fixedKCentArr(spark: SparkSession, sfDir: String, k: Int): DataFrame =
+    SessionCache.get(spark, sfDir, s"Similarity.centK.$k") {
       val vm = lloydsVm(spark, sfDir).select(col("vec_id"), col("v"))
       lloydsIterate(vm,
         vm.filter(col("vec_id") < k)
           .select(col("vec_id").as("c_id"), col("v").as("cv")))
         .localCheckpoint(true)
-    }).agg(collect_list(struct(col("c_id"), col("cv"))).as("cents"))
-  }
+    }.agg(collect_list(struct(col("c_id"), col("cv"))).as("cents"))
 
   /** Index BUILD: train the Lloyd's centroids and persist them as a
     * parquet artifact — the train/use split of a vector index (FAISS

@@ -16,8 +16,8 @@ import graft.operators.{Dedup, Sampling}
   * graph and on constructed graphs that stress the label rule (isolated
   * reps, disjoint cliques, a star whose centre has the LARGEST id, a
   * path deeper than [[Dedup.MaxCcRounds]]). The cores are called
-  * directly: the (session, corpus, "repComponents") cache would
-  * otherwise serve the first build to both shapes.
+  * directly, so both shapes label one groups frame (through the session
+  * cache the gate, a registry knob, would key two separate builds).
   *
   * Also pins the job count of building dd_decisions: the local shape
   * launches a fixed number of jobs, where the distributed loop's grows

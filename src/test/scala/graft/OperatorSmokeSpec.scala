@@ -20,6 +20,14 @@ class OperatorSmokeSpec extends SparkSpec {
     assert(missing.isEmpty, s"queries without oracle SQL: $missing")
   }
 
+  test("a query-name list rejects every unknown name; an empty one means all") {
+    assert(SparkEntry.queryNames(" q1_pricing, dd_exact ,") == Some(Set("q1_pricing", "dd_exact")))
+    assert(SparkEntry.queryNames(" , ").isEmpty, "an empty list means every query")
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.queryNames("q1_pricing_summary,dd_exact,dd_exactt"))
+    assert(e.getMessage.endsWith("unknown query names: dd_exactt, q1_pricing_summary"))
+  }
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs and returns rows at sf0.001") {
       val df = fn(spark, sfDir)

@@ -48,12 +48,15 @@ import graft.operators.Curation
   * a build may read other entries (fpGroups reads the simhash table,
   * the centroid tables read the Lloyd's vector table). The one
   * remaining deadlock is a cycle of builds, each waiting on the next;
-  * the entries' dependencies form none. Per-query scratch registration
-  * (`Sampling.trackScratch`) and the checkpoint row-count memo are
-  * concurrent collections; no operator registers views or functions in
-  * the session. The operator objects initialize on the calling thread
-  * (`run` resolves `SparkEntry.queries` before any stage thread starts),
-  * so no two stage threads race through one object's initializer.
+  * the entries' dependencies form none. A build marks only its own
+  * thread (`SessionCache.building`, a thread-local depth), so a stage's
+  * checkpoints are session-scoped exactly when that stage's thread is
+  * inside a build; the scratch registry and the row-count memo behind
+  * `Sampling.materialize` are concurrent collections; no operator
+  * registers views or functions in the session. The operator objects
+  * initialize on the calling thread (`run` resolves `SparkEntry.queries`
+  * before any stage thread starts), so no two stage threads race
+  * through one object's initializer.
   *
   * Scale notes (100 TB):
   *  - artifacts are written with each stage's native output partitioning

@@ -225,10 +225,9 @@ object Analytics {
     // reuse fires here even under AQE — measured), and two independent
     // range-samplings assigning rows to partitions is also a correctness
     // hazard the materialization removes.
-    val ranged = Sampling.trackScratch(spend
+    val ranged = Sampling.materialize(spend
       .repartitionByRange(32, col("spend_cents").desc, col("o_custkey"))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true))
+      .withColumn("__pid", spark_partition_id()))
     val local = ranged.withColumn("__lrn", row_number().over(
       Window.partitionBy(col("__pid")).orderBy(col("spend_cents").desc, col("o_custkey"))))
     // pmod(__pid, 1) ≡ 0: same single-partition semantics over the 32-row

@@ -155,11 +155,11 @@ object Balance {
     // bound is an operator argument, not a law, so it is checkpointed
     // (consumed once; same total work) and its broadcast size-gated
     // like every other derived-frame hint.
-    val slotted = Sampling.trackScratch(Sampling.countedCheckpoint(
+    val slotted = Sampling.materialize(
       ranked.join(broadcast(totals), comboCols)
         .crossJoin(broadcast(target))
         .withColumn("__need", greatest(col("__avg_target") - col("__total"), lit(0L)))
-        .filter(col("__rn") - 1 < col("__need"))))
+        .filter(col("__rn") - 1 < col("__need")))
     Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
       .join(Sampling.gatedBroadcast(slotted), "doc_id")
       .withColumn("aug_slot",

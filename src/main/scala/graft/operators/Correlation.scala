@@ -104,11 +104,10 @@ object Correlation {
     // checkpoint: ranked feeds three branches (itself, the count, the
     // shift); without it each branch re-runs the rank window over the
     // internally-checkpointed range partitions (11-shuffle plan vs 2)
-    val ranked = Sampling.trackScratch(Sampling.globalRank(
+    val ranked = Sampling.materialize(Sampling.globalRank(
         f.withColumn("__h", md5(col("doc_id").cast("string"))),
         Seq(col("__h")), col("doc_id"), "__r")
-      .drop("__h")
-      .localCheckpoint(true))
+      .drop("__h"))
     val tot = ranked.agg(max(col("__r")).as("__n"))
     val shifted = ranked.crossJoin(broadcast(tot))
       .select((pmod(col("__r"), col("__n")) + 1).as("__r2"),

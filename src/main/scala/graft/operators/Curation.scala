@@ -234,9 +234,8 @@ object Curation {
     // never canonicalize equal and ReuseExchange cannot fire (the
     // tx_corpus_novelty lesson, solved here the dd_incremental way:
     // materialize the vocabulary-sized frame once, derive both sides).
-    val tf = Sampling.trackScratch(posting.groupBy(col("tok"))
-      .agg(count(lit(1)).as("tf"), sum(col("keep")).as("tf_keep"))
-      .localCheckpoint(true))
+    val tf = Sampling.materialize(posting.groupBy(col("tok"))
+      .agg(count(lit(1)).as("tf"), sum(col("keep")).as("tf_keep")))
     val tot = tf.agg(sum(col("tf")).as("__t"), sum(col("tf_keep")).as("__tk"))
     // The ×10⁶ ppm scaling runs in DECIMAL(38,0): at real corpus scale
     // (~10¹³ token occurrences) __tk * 1000000 overflows BIGINT, which
@@ -305,15 +304,14 @@ object Curation {
     * emits approx_percentile (bounded sketch state per source), exactly
     * like p01's cutoffs. */
   def txCcnetBucket(spark: SparkSession, sfDir: String): DataFrame = {
-    // Checkpointed + tracked: the cutoffs aggregate AND the final join
+    // Materialized: the cutoffs aggregate AND the final join
     // both consume the scored frame — left lazy, each re-runs the
     // unigram chain's two tokenize passes (PlanAuditSpec's kernel
     // budget caught word_tokens at 6×/plan; the dd_incremental pattern
     // pins it at 2).
-    val scored = Sampling.trackScratch(unigramScoreCore(spark, sfDir)
+    val scored = Sampling.materialize(unigramScoreCore(spark, sfDir)
       .select(col("doc_id"), col("avg_tok_ppb"))
-      .join(docs(spark, sfDir).select(col("doc_id"), col("source")), "doc_id")
-      .localCheckpoint(true))
+      .join(docs(spark, sfDir).select(col("doc_id"), col("source")), "doc_id"))
     val cuts = scored.groupBy(col("source"))
       .agg(graft.functions.Quantiles.pctls(spark, "avg_tok_ppb",
         Seq(1.0 / 3, 2.0 / 3)).as("cs"))
@@ -471,9 +469,9 @@ object Curation {
     // Contaminated-id set: corpus-growing (it is a SUBSET of the
     // corpus), so checkpoint (tiny; also stops the verdict join from
     // re-running the contamination chain) and size-gate the hint.
-    val contam = Sampling.trackScratch(Sampling.countedCheckpoint(
+    val contam = Sampling.materialize(
       contamination.select(col("doc_id")).distinct()
-        .withColumn("__contam", lit(1L))))
+        .withColumn("__contam", lit(1L)))
     val base = dedup.join(gopherKeep, "doc_id")
       .join(Sampling.gatedBroadcast(contam), Seq("doc_id"), "left")
       .select(col("doc_id"), col("component"), col("dedup_keep"), col("gopher_keep"),
@@ -485,7 +483,7 @@ object Curation {
       // classifierStats directly, NOT txQualityClassifier: the query
       // entry's presentation checkpoint+sort (Sampling.presentSorted)
       // would be destroyed by this join anyway — joining the raw
-      // column algebra skips a tracked localCheckpoint and a sort.
+      // column algebra skips a scratch checkpoint and a sort.
       else base.join(
         classifierStats(docs(spark, sfDir).select(col("doc_id"), col("text")))
           .select(col("doc_id"), col("clf_keep")),

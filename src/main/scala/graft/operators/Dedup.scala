@@ -137,9 +137,8 @@ object Dedup {
     * cost one partial per task, never a hot-key window — joins back on
     * the same fp key the groupBy shuffled on. */
   def ddSoftdedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val fp = Sampling.trackScratch(Tables.documents(spark, sfDir)
-      .select(col("doc_id"), fingerprint(col("text")).as("fp"))
-      .localCheckpoint(true))
+    val fp = Sampling.materialize(Tables.documents(spark, sfDir)
+      .select(col("doc_id"), fingerprint(col("text")).as("fp")))
     val g = fp.groupBy(col("fp"))
       .agg(count(lit(1)).as("dup_count"), min(col("doc_id")).as("canonical_id"))
     fp.join(g, "fp")
@@ -269,21 +268,11 @@ object Dedup {
     within.unionByName(cross).agg(sum(col("c")).cast("long").as("n_pairs"))
   }
 
-  /** Unpersist a checkpoint-backed frame's blocks (build-time scratch
-    * that outlived its consumers — the shingle/candidate checkpoints
-    * after the verified compact frames materialize). */
-  private def dropCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ =>
-    }
-
   private def minhashGroups(spark: SparkSession, sfDir: String): DataFrame = {
     // raw-text identity groups (md5 of the text itself — NOT the
     // normalized dd_exact fingerprint: normalization-equal texts can
     // have different shingle sets and must not merge here)
-    Sampling.countedCheckpoint(Tables.documents(spark, sfDir)
+    Sampling.materialize(Tables.documents(spark, sfDir)
       .select(col("doc_id"), md5(col("text")).as("h"))
       .groupBy(col("h"))
       .agg(min(col("doc_id")).as("rep_id"),
@@ -313,7 +302,7 @@ object Dedup {
     // checkpoint once and serve signatures, verify, AND the within-group
     // Jaccard — zero tokenize rescans; above it, stay lazy and prune the
     // rescans instead (shingling everything twice beats holding it all)
-    val shCpOpt = if (bloomOn) None else Some(shPlain.localCheckpoint(true))
+    val shCpOpt = if (bloomOn) None else Some(Sampling.materialize(shPlain))
     // all K signatures in one native pass (one md5 per shingle)
     val sigDf = shCpOpt.getOrElse(shPlain).select(col("doc_id"), col("sh"),
       NativeExpressions.minHashSigs(col("sh"), K, P).as("sigs"))
@@ -321,7 +310,7 @@ object Dedup {
     val (cands, verifySrc, candCpOpt) = shCpOpt match {
       case Some(cp) => (candsPlain, cp, None)
       case None =>
-        val cpC = candsPlain.localCheckpoint(true)
+        val cpC = Sampling.materialize(candsPlain)
         val bloom = Aggregates.bloomFilterBytes(
           cpC.select(explode(array(col("id_a"), col("id_b"))).as("id")),
           "id", BloomItems, BloomBits)
@@ -360,12 +349,12 @@ object Dedup {
     if (!materialize) (repPairs, withinGroups)
     else {
       // Eager checkpoints for the session cache; once they hold, the
-      // build-time shingle/candidate checkpoints are garbage — drop
+      // build-time shingle/candidate checkpoints are garbage — release
       // them now rather than pinning shingle arrays in executor
       // storage until the ContextCleaner notices.
-      val out = (repPairs.localCheckpoint(true), withinGroups.localCheckpoint(true))
-      shCpOpt.foreach(dropCheckpoint)
-      candCpOpt.foreach(dropCheckpoint)
+      val out = (Sampling.materialize(repPairs), Sampling.materialize(withinGroups))
+      shCpOpt.foreach(Sampling.release)
+      candCpOpt.foreach(Sampling.release)
       out
     }
   }
@@ -433,7 +422,7 @@ object Dedup {
     SessionCache.get(spark, sfDir, "Dedup.ngram") {
       // replica-collapsed blocker (r16) — the cached frame is the
       // thresholded compact output, sorted by the gate entry below
-      ddNgramJaccardOf(spark, Tables.documents(spark, sfDir)).localCheckpoint(true)
+      Sampling.materialize(ddNgramJaccardOf(spark, Tables.documents(spark, sfDir)))
     }.orderBy(col("id_a"), col("id_b"))
 
   /** [[ddNgramJaccard]] over any (doc_id, text) frame — the
@@ -495,11 +484,10 @@ object Dedup {
       SessionCache.get(spark, sfDir, "Dedup.minhash.groups")(minhashGroups(spark, sfDir))
     // same size-gated rep-scan hint as minhashVerified (groups is the
     // eager session checkpoint, so the gate's count is cheap)
-    val repSig = Sampling.trackScratch(Tables.documents(spark, sfDir)
+    val repSig = Sampling.materialize(Tables.documents(spark, sfDir)
       .join(Sampling.gatedBroadcast(groups.select(col("rep_id").as("doc_id"))), "doc_id")
       .select(col("doc_id"), NativeExpressions.minHashSigs(
-        NativeExpressions.wordShingles(col("text"), 3), K, P).as("sigs"))
-      .localCheckpoint(true))
+        NativeExpressions.wordShingles(col("text"), 3), K, P).as("sigs")))
     val cands = minhashCandidates(repSig)
     // native positionwise matcher: the zip_with+aggregate HOF ran an
     // interpreted lambda per pair over the K-long arrays — the hot cost
@@ -555,7 +543,7 @@ object Dedup {
       // whole table (shingles included) fits executor storage easily
       // and the extra rescan machinery would only add driver sync
       // points.
-      val sig = Sampling.trackScratch(signatureDf(spark, sfDir).localCheckpoint(true))
+      val sig = Sampling.materialize(signatureDf(spark, sfDir))
       incrementalAgainst(sig.filter(newP),
         sig.filter(!newP).withColumnRenamed("doc_id", "b_id"))
     } else if (nDocs < 2L * nDistinct) {
@@ -565,22 +553,21 @@ object Dedup {
       // fp + sigs only, candidates come from signatures alone, and a
       // Bloom over candidate ids prunes the one verification rescan so
       // only candidate docs are re-tokenized.
-      val slim = Sampling.trackScratch(Sampling.countedCheckpoint(
-        signatureDf(spark, sfDir).select(col("doc_id"), col("fp"), col("sigs"))))
+      val slim = Sampling.materialize(
+        signatureDf(spark, sfDir).select(col("doc_id"), col("fp"), col("sigs")))
       val batch = slim.filter(newP)
       val corpus = slim.filter(!newP).withColumnRenamed("doc_id", "b_id")
       val exact = incrementalExact(batch, corpus)
       // eager: the bloom build and the verify join both read it
-      val cand = Sampling.trackScratch(Sampling.countedCheckpoint(
-        incrementalCands(batch, corpus)))
+      val cand = Sampling.materialize(incrementalCands(batch, corpus))
       val bloom = graft.functions.Aggregates.bloomFilterBytes(
         cand.select(explode(array(col("doc_id"), col("b_id"))).as("id")),
         "id", BloomItems, BloomBits)
-      val candSh = Sampling.trackScratch(Sampling.countedCheckpoint(
+      val candSh = Sampling.materialize(
         Tables.documents(spark, sfDir)
           .filter(graft.functions.Aggregates.mightContain(bloom, col("doc_id")))
           .select(col("doc_id"),
-            NativeExpressions.wordShingles(col("text"), 3).as("sh"))))
+            NativeExpressions.wordShingles(col("text"), 3).as("sh")))
       val nearAll = incrementalNear(cand,
         candSh.select(col("doc_id"), col("sh").as("sh_n")),
         candSh.select(col("doc_id").as("b_id"), col("sh").as("sh_b")))
@@ -603,17 +590,17 @@ object Dedup {
       // (j desc, b_id asc) winner is the max over matching texts of
       // (j, -min_corpus_id) — the exact struct max below
       // (IncrementalCollapseSpec pins it against the naive form).
-      val groups = Sampling.trackScratch(Sampling.countedCheckpoint(
+      val groups = Sampling.materialize(
         Tables.documents(spark, sfDir)
           .groupBy(md5(col("text")).as("tkey"))
           .agg(min(col("doc_id")).as("rep_id"),
             sort_array(collect_list(when(newP, col("doc_id")))).as("batch_ids"),
-            min(when(!newP, col("doc_id"))).as("min_corpus_id"))))
+            min(when(!newP, col("doc_id"))).as("min_corpus_id")))
       // one text pass over DISTINCT texts (gated rep-id broadcast keeps
       // the scan map-side); distinct-content-sized, so storing the
       // shingle arrays is cheap here — unlike the corpus-sized per-doc
       // checkpoint this path replaces
-      val sig = Sampling.trackScratch(Sampling.countedCheckpoint(
+      val sig = Sampling.materialize(
         Tables.documents(spark, sfDir)
           .join(Sampling.gatedBroadcast(groups.select(
             col("rep_id").as("doc_id"), col("tkey"),
@@ -622,7 +609,7 @@ object Dedup {
           .select(col("tkey"), col("hasBatch"), col("min_corpus_id"),
             fingerprint(col("text")).as("fp"),
             NativeExpressions.wordShingles(col("text"), 3).as("sh"))
-          .withColumn("sigs", NativeExpressions.minHashSigs(col("sh"), K, P))))
+          .withColumn("sigs", NativeExpressions.minHashSigs(col("sh"), K, P)))
       val batchT = sig.filter(col("hasBatch"))
       val corpusT = sig.filter(col("min_corpus_id").isNotNull)
       // exact: smallest corpus holder per normalized fingerprint
@@ -760,7 +747,7 @@ object Dedup {
     // band join and the verify join both read it); the corpus
     // contributes pre-computed signature columns straight from the scan.
     incrementalAgainst(
-      Sampling.trackScratch(signatureDf(spark, sfDir).filter(newP).localCheckpoint(true)),
+      Sampling.materialize(signatureDf(spark, sfDir).filter(newP)),
       spark.read.parquet(artifactPath).filter(!newP)
         .withColumnRenamed("doc_id", "b_id"))
   }
@@ -871,10 +858,9 @@ object Dedup {
     // compact (doc_id, tkey) corpus frame — the simhash fpDf analogue;
     // checkpointed: consumed by the gate's count, the within self-join
     // and both cross expansions.
-    val tidDf = Sampling.trackScratch(Sampling.countedCheckpoint(
-      keyed.select(col("doc_id"), col("tkey"))))
-    // served from the countedCheckpoint memo — the materializing scan
-    // IS the count job (the eager-checkpoint + count form paid two)
+    val tidDf = Sampling.materialize(keyed.select(col("doc_id"), col("tkey")))
+    // served from the materialize memo — the materializing scan IS the
+    // count job
     val nDocs = Sampling.knownRowCount(tidDf).getOrElse(tidDf.count())
     val maxBroadcastRows = Sampling.broadcastMaxRows(spark)
     // one size-gate decision for every corpus-cardinality hint below
@@ -900,8 +886,11 @@ object Dedup {
       .filter(col("ts").isNotNull)
       .filter(expr(s"aggregate(ts, 0L, (a, t) -> a + t.g * t.m) <= ${cap}L"))
     // text-level pair stats, checkpointed: the budget action, the
-    // within path and the cross path all read the compact frame
-    val textPairs = Sampling.trackScratch(perItem
+    // within path and the cross path all read the compact frame.
+    // LAZY: the closed-form budget aggregate right below is the first
+    // action and fills every partition as it scans — same single
+    // computation as the eager form minus one job
+    val textPairs = Sampling.materializeLazily(perItem
       .select(explode(flatten(transform(col("ts"), (x, i) =>
         transform(slice(col("ts"), i + lit(1), size(col("ts"))),
           y => struct(x.getField("tkey").as("ka"), y.getField("tkey").as("kb"),
@@ -912,11 +901,7 @@ object Dedup {
       .agg(sum(col("p.w")).as("inter"),
         first(col("p.ga")).as("ga"), first(col("p.gb")).as("gb"),
         first(col("p.na")).as("n_a"), first(col("p.nb")).as("n_b"))
-      .filter(textFilter)
-      // LAZY: the closed-form budget aggregate right below is the
-      // first action and materializes every partition as it scans —
-      // same single computation as the eager form minus one job
-      .localCheckpoint(false))
+      .filter(textFilter))
     // output-scale budgeting (the r15 dd_simhash pattern): exact pair
     // count in closed form over the compact frame, Long-safe division
     val totalPairs = textPairs.select(
@@ -1271,10 +1256,10 @@ object Dedup {
     * per session total. */
   private def simhashFp(spark: SparkSession, sfDir: String): DataFrame =
     SessionCache.get(spark, sfDir, "Dedup.simhash.fp") {
-      // countedCheckpoint: the one-time materializing scan doubles as
-      // the broadcast gate's corpus count, so per-consumer nDocs reads
-      // are memo lookups, not jobs
-      Sampling.countedCheckpoint(Tables.documents(spark, sfDir)
+      // the one-time materializing scan doubles as the broadcast gate's
+      // corpus count, so per-consumer nDocs reads are memo lookups, not
+      // jobs
+      Sampling.materialize(Tables.documents(spark, sfDir)
         .select(col("doc_id"), NativeExpressions.simHash32(col("text")).as("fp")))
     }
 
@@ -1291,13 +1276,12 @@ object Dedup {
       // in the join output instead of flowing downstream; distinct() is
       // over fp-level edges (a pair of fps can share several bands),
       // which is the SMALL relation
-      bands.as("x").join(bands.as("y"),
+      Sampling.materialize(bands.as("x").join(bands.as("y"),
           col("x.bk") === col("y.bk") && col("x.fp") < col("y.fp") &&
             bit_count(col("x.fp").bitwiseXOR(col("y.fp"))) <= HammingMax)
         .select(col("x.fp").as("fp_a"), col("y.fp").as("fp_b"),
           bit_count(col("x.fp").bitwiseXOR(col("y.fp"))).cast("long").as("hamming"))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct())
     }
 
   /** dd_simhash_clusters: the dense-corpus form of dd_simhash — docs with
@@ -1331,13 +1315,13 @@ object Dedup {
     * (every member of a component collapses to its minimum rep id).
     *
     * Shape decided from the MEASURED rep-edge set (the
-    * [[Sampling.gatedBroadcast]] rule): one counted checkpoint
-    * materializes the distinct rep edges and memoizes their count. At
+    * [[Sampling.gatedBroadcast]] rule): one [[Sampling.materialize]]
+    * job fills the distinct rep edges and memoizes their count. At
     * or under [[Sampling.BroadcastMaxRowsKey]] the edges are collected
     * (one job over the cached blocks) and labeled by a driver-side
     * union-find whose roots are component minima — a fixed job count
     * however deep the components are, where the distributed loop pays
-    * jobs per round (two eager checkpoints and a convergence count, each
+    * jobs per round (two materializations and a convergence count, each
     * shuffle its own AQE job: 85 jobs for 6 rounds at sf0.1). Near-dup
     * rep graphs are small (63k edges among 4.7k reps at sf0.1).
     *
@@ -1420,9 +1404,8 @@ object Dedup {
     * cur_verdict all start from this table. */
   private[graft] def fpGroups(spark: SparkSession, sfDir: String): DataFrame =
     SessionCache.get(spark, sfDir, "Dedup.fpGroups") {
-      simhashFp(spark, sfDir).groupBy(col("fp"))
-        .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("n_docs"))
-        .localCheckpoint(true)
+      Sampling.materialize(simhashFp(spark, sfDir).groupBy(col("fp"))
+        .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("n_docs")))
     }
 
   /** (rep_id, component) over the rep near-dup graph. See
@@ -1445,7 +1428,7 @@ object Dedup {
     val bands = groups.select(col("fp"), col("rep_id"), explode(bandKeys).as("bk"))
     // ONE job materializes the edge set and memoizes its count for the
     // shape gate; both shapes read the checkpoint.
-    val edges = Sampling.countedCheckpoint(bands.as("x").join(bands.as("y"),
+    val edges = Sampling.materialize(bands.as("x").join(bands.as("y"),
         col("x.bk") === col("y.bk") && col("x.rep_id") < col("y.rep_id") &&
           bit_count(col("x.fp").bitwiseXOR(col("y.fp"))) <= HammingMax)
       .select(col("x.rep_id").as("a"), col("y.rep_id").as("b"))
@@ -1454,8 +1437,9 @@ object Dedup {
   }
 
   /** (rep_id, component) for every `reps` row, component = the minimum
-    * rep_id connected to it through `edges` (a, b) — a
-    * [[Sampling.countedCheckpoint]] frame, so the gate reads its memo.
+    * rep_id connected to it through `edges` (a, b). `edges` must be a
+    * [[Sampling.materialize]]d frame: the gate reads its memoized row
+    * count (no job), and both shapes re-read its blocks.
     * Within the broadcast gate: [[localComponents]]; above it:
     * [[propagateComponents]]. */
   private[graft] def labelComponents(reps: DataFrame, edges: DataFrame): DataFrame =
@@ -1524,14 +1508,14 @@ object Dedup {
   /** Distributed min-label propagation with pointer jumping: the
     * [[labelComponents]] shape above the broadcast gate. */
   private def propagateComponents(reps: DataFrame, edges: DataFrame): DataFrame = {
-    // localCheckpoint (eager) after every round: without lineage
+    // materialize (eager) after every round: without lineage
     // truncation each round's plan embeds two copies of the previous
     // one — an exponentially growing logical plan that exhausts the
     // driver long before the data does.
     val bidir = edges.unionByName(
       edges.select(col("b").as("a"), col("a").as("b")))
-    var labels = reps.select(col("rep_id"), col("rep_id").as("component"))
-      .localCheckpoint(true)
+    var labels = Sampling.materialize(
+      reps.select(col("rep_id"), col("rep_id").as("component")))
     var converged = false
     var round = 0
     while (!converged && round < MaxCcRounds) {
@@ -1540,11 +1524,11 @@ object Dedup {
       // Carry the previous label through the update so convergence is a
       // cheap scan of the checkpointed result — not a second join against
       // the old labels (which added a shuffle + job per round).
-      val stepped = labels.join(neighborMin, labels("rep_id") === neighborMin("a"), "left")
-        .select(col("rep_id"),
-          least(col("component"), coalesce(col("nmin"), col("component"))).as("component"),
-          col("component").as("old"))
-        .localCheckpoint(true)
+      val stepped = Sampling.materialize(
+        labels.join(neighborMin, labels("rep_id") === neighborMin("a"), "left")
+          .select(col("rep_id"),
+            least(col("component"), coalesce(col("nmin"), col("component"))).as("component"),
+            col("component").as("old")))
       // Pointer jump — component := component's component. One extra tiny
       // self-join per round turns O(diameter) convergence into O(log d):
       // a chain component of eccentricity 10 converges in 4 rounds, not 11.
@@ -1552,13 +1536,12 @@ object Dedup {
       // the fixpoint is unchanged (at it, component[component[x]] ==
       // component[x]). stepped is checkpointed above so this self-join does
       // not re-evaluate the neighbor join twice.
-      val next = stepped.as("s")
+      val next = Sampling.materialize(stepped.as("s")
         .join(stepped.select(col("rep_id").as("j_id"), col("component").as("j_comp")).as("j"),
           col("s.component") === col("j.j_id"), "left")
         .select(col("s.rep_id").as("rep_id"),
           least(col("s.component"), coalesce(col("j.j_comp"), col("s.component"))).as("component"),
-          col("s.old").as("old"))
-        .localCheckpoint(true)
+          col("s.old").as("old")))
       val changed = next.filter(col("component") =!= col("old")).limit(1).count()
       labels = next.select(col("rep_id"), col("component"))
       converged = changed == 0

@@ -1,15 +1,25 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.nibble
 
-/** Scalable deterministic per-group ranking.
+/** Materialization, measured-count gates and scalable ranking.
   *
-  * Several pipeline stages (p05 balance, p23 split) need "the first N rows
-  * of each group under a deterministic hash order". A plain
+  * MATERIALIZATION. Every operator checkpoint goes through
+  * [[Sampling.materialize]] (eager, counted) or
+  * [[Sampling.materializeLazily]], so the checkpoint policy (local
+  * blocks today) is decided here once. The scope rule: a frame
+  * materialized inside a [[SessionCache]] build belongs to the session
+  * (alive across queries); any other is per-query scratch, freed by
+  * [[Sampling.releaseScratch]]. The gates ([[Sampling.gatedBroadcast]])
+  * read the materialization's row-count memo.
+  *
+  * RANKING. Several pipeline stages (p05 balance, p23 split) need "the
+  * first N rows of each group under a deterministic hash order". A plain
   * `row_number() OVER (PARTITION BY group ORDER BY hash)` funnels every
   * group into a single sort task — with ~160 combo groups that is a hard
   * parallelism ceiling at 100 TB (the same failure mode the round-1 as-of
@@ -27,7 +37,8 @@ import graft.functions.TextFunctions.nibble
   * the DuckDB oracle uses. The tiny counts table from pass 1 is exposed so
   * callers can derive group totals / population targets from it instead of
   * re-scanning the input (each aggregate branch of a DataFrame DAG is a
-  * separate evaluation of the scan).
+  * separate evaluation of the scan). [[Sampling.globalRank]] is the
+  * corpus-wide, group-less form.
   */
 object Sampling {
 
@@ -45,19 +56,18 @@ object Sampling {
     * plans with a shuffle below the final sort reuse its files already
     * and should keep a plain orderBy.
     *
-    * LAZY checkpoint deliberately: the boundary-sampling job is the
-    * first evaluation and materializes every partition as it samples,
-    * so the real pass reads the cache — same single computation as the
-    * eager form without scheduling a separate materialization job per
-    * query (the eager form cost ~+1 s/query at sf0.1's scale). Nothing
-    * here needs the eager form's boundary-pinning (that is globalRank's
-    * concern — its two BRANCHES must agree; a single sort has one).
+    * LAZY checkpoint deliberately ([[materializeLazily]]): the
+    * boundary-sampling job is the first evaluation and materializes
+    * every partition as it samples, so the real pass reads the cache —
+    * same single computation as the eager form without scheduling a
+    * separate materialization job per query (the eager form cost
+    * ~+1 s/query at sf0.1's scale). Nothing here needs the eager form's
+    * boundary-pinning (that is globalRank's concern — its two BRANCHES
+    * must agree; a single sort has one).
     *
-    * Storage reclamation of the checkpointed blocks relies on the
-    * ContextCleaner GC'ing the LogicalRDD once the query's Dataset is
-    * unreachable — acceptable for the gate mains (bounded query count,
-    * MEMORY_AND_DISK spills under pressure), and a production job
-    * should not be here at all: set [[PresentationKey]] to "off".
+    * The checkpoint is per-query scratch ([[releaseScratch]]) unless
+    * taken inside a session-cache build; a production job should not
+    * be here at all: set [[PresentationKey]] to "off".
     *
     * PRODUCTION KNOB: at 100 TB a presentation ORDER BY should not
     * exist — a partitioned sink ([[graft.sources.Sinks]]) repartitions
@@ -71,45 +81,79 @@ object Sampling {
     * projection from the kernel-budget and cross-join assertions). */
   def presentSorted(df: DataFrame, keys: Column*): DataFrame =
     if (df.sparkSession.conf.getOption(PresentationKey).contains("off")) df
-    else trackScratch(df.localCheckpoint(false)).orderBy(keys: _*)
+    else materializeLazily(df).orderBy(keys: _*)
+
+  /** Checkpoint `df` and count it in one job: the count of the lazy
+    * checkpoint's own RDD is a single stage that fills the blocks, and
+    * it goes to the row-count memo ([[knownRowCount]]). (`Dataset.count()`
+    * plans a global aggregate, which AQE runs as two jobs; the eager
+    * `localCheckpoint` runs the same stage and discards the count.)
+    * Shuffles below `df` still run as their own jobs. */
+  private[graft] def materialize(df: DataFrame): DataFrame = {
+    val (cp, rdd) = checkpoint(df)
+    knownCounts.put(rdd, java.lang.Long.valueOf(rdd.count()))
+    cp
+  }
+
+  /** [[materialize]] without the count: the blocks fill during the
+    * first action that consumes the frame. Only for frames whose first
+    * consumer scans every partition anyway (a range sort's boundary
+    * sampling, a closed-form total); any other first consumer leaves
+    * partitions unfilled, to be computed again later. Same scope rule. */
+  private[graft] def materializeLazily(df: DataFrame): DataFrame = checkpoint(df)._1
+
+  /** The one `localCheckpoint` in main source, scoped by the rule in
+    * the object scaladoc. */
+  private def checkpoint(df: DataFrame): (DataFrame, RDD[_]) = {
+    val cp = df.localCheckpoint(false)
+    val rdd = checkpointRdd(cp).get
+    if (!SessionCache.building) scratch.add(new java.lang.ref.WeakReference(rdd))
+    (cp, rdd)
+  }
+
+  /** The checkpoint RDD under `df` when `df` is a checkpoint or a
+    * row-preserving projection (Project/SubqueryAlias only) of one. */
+  private def checkpointRdd(df: DataFrame): Option[RDD[_]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Project, SubqueryAlias, LogicalPlan}
+    def walk(plan: LogicalPlan): Option[RDD[_]] = plan match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
+      case p: Project => walk(p.child)
+      case s: SubqueryAlias => walk(s.child)
+      case _ => None
+    }
+    walk(df.queryExecution.analyzed)
+  }
 
   /** Per-QUERY scratch checkpoints (presentation frames, globalRank's
-    * boundary pins) — distinct from the SESSION caches (pair frames,
-    * component labels, knn edges, centroid tables), which are never
-    * tracked here. Without an explicit release, every query's full
-    * computed output stays pinned in executor storage until the
-    * ContextCleaner's reference-queue GC happens to run — on a 48 GB
-    * heap old-gen collections are rare, so a 100-query sweep at the
-    * 100× corpus filled the store and THRASHED the evict-to-disk path
-    * (dd_corpus_report 353 s vs 76 s in r10's record, serializing
-    * hundreds of 200 MB blocks out and back per query). The mains call
-    * [[releaseScratch]] between queries; a query's scratch is garbage
-    * the moment its action completes (re-runs rebuild fresh frames). */
+    * boundary pins, an operator's intermediate tables). Without an
+    * explicit release, every query's full computed output stays pinned
+    * in executor storage until the ContextCleaner's reference-queue GC
+    * happens to run — on a 48 GB heap old-gen collections are rare, so
+    * a 100-query sweep at the 100× corpus filled the store and THRASHED
+    * the evict-to-disk path (dd_corpus_report 353 s vs 76 s in r10's
+    * record, serializing hundreds of 200 MB blocks out and back per
+    * query). The mains call [[releaseScratch]] between queries; a
+    * query's scratch is garbage the moment its action completes
+    * (re-runs rebuild fresh frames). */
   // Weak references: a consumer that never calls releaseScratch (a
   // library user outside the mains) must not leak pinned frames through
   // the registry itself — once the Dataset is unreachable the RDD GCs
   // and the ContextCleaner reclaims it exactly as before this registry
   // existed; the dead entry is skipped on the next drain.
   private val scratch = new java.util.concurrent.ConcurrentLinkedQueue[
-    java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]]]()
+    java.lang.ref.WeakReference[RDD[_]]]()
 
-  /** Register a checkpoint-backed frame as per-QUERY scratch (released
-    * by the mains between queries). Operators wrap their in-query
-    * eager checkpoints with this; session-cache frames must never be
-    * tracked. */
-  private[graft] def trackScratch(df: DataFrame): DataFrame = {
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        scratch.add(new java.lang.ref.WeakReference(lr.rdd))
-      case _ =>
-    }
-    df
-  }
+  /** Free one checkpoint's blocks now, whatever its scope (a build's
+    * intermediates once its cached frames hold). Poisons `df` like
+    * [[releaseScratch]]. */
+  private[graft] def release(df: DataFrame): Unit =
+    checkpointRdd(df).foreach(_.unpersist(blocking = false))
 
   /** Unpersist every tracked scratch checkpoint. Safe mid-session: the
     * tracked frames are per-query outputs whose consuming action has
-    * finished; session-cache frames are never tracked. Lazy checkpoints
-    * that were never materialized unpersist as a no-op.
+    * finished; frames materialized inside a session-cache build are
+    * never tracked. Lazy checkpoints that were never filled unpersist
+    * as a no-op.
     *
     * POISONS retained frames: a tracked frame is backed by a
     * localCheckpoint RDD whose blocks are unrecoverable once
@@ -167,53 +211,24 @@ object Sampling {
   val PreRangeMinPairsKey = "spark.graft.preRangeMinPairs"
   val PreRangeMinPairsDefault = 4L << 20
 
-  /** Row counts of checkpoints materialized by [[countedCheckpoint]],
-    * keyed by the checkpoint RDD. Weak keys: once the Dataset (and so
-    * its RDD) is unreachable the entry GCs with it — the map never
-    * pins a released scratch frame. */
+  /** Row counts of [[materialize]]d checkpoints, keyed by the
+    * checkpoint RDD. Weak keys: once the Dataset (and so its RDD) is
+    * unreachable the entry GCs with it — the map never pins a released
+    * scratch frame. */
   private val knownCounts = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.rdd.RDD[_], java.lang.Long]())
+    new java.util.WeakHashMap[RDD[_], java.lang.Long]())
 
-  /** Checkpoint a frame and REMEMBER its row count, in ONE job: the
-    * lazy localCheckpoint is materialized by the count itself (persist
-    * on first action), where the eager form runs the same full scan
-    * and throws the count away — every gated site then paid a SECOND
-    * job to re-count the cached blocks ([[gatedBroadcast]]'s gate; the
-    * r16 verdict measured the extra per-query action as a 10–25%
-    * sf0.1 tax on the gated rows). [[knownRowCount]] serves the memo
-    * to any row-preserving projection of the checkpoint. */
-  private[graft] def countedCheckpoint(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint(false)
-    val n = cp.count()
-    cp.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        knownCounts.put(lr.rdd, java.lang.Long.valueOf(n))
-      case _ =>
-    }
-    cp
-  }
-
-  /** The exact row count of `df` WITHOUT running a job, when `df` is a
-    * row-preserving projection (Project/SubqueryAlias only — never a
-    * Filter or aggregate) of a [[countedCheckpoint]] frame. */
-  private[graft] def knownRowCount(df: DataFrame): Option[Long] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Project, SubqueryAlias, LogicalPlan}
-    def walk(plan: LogicalPlan): Option[Long] = plan match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        Option(knownCounts.get(lr.rdd)).map(_.longValue)
-      case p: Project => walk(p.child)
-      case s: SubqueryAlias => walk(s.child)
-      case _ => None
-    }
-    walk(df.queryExecution.analyzed)
-  }
+  /** The exact row count of `df` WITHOUT running a job, when
+    * [[checkpointRdd]] finds a [[materialize]]d frame under it. */
+  private[graft] def knownRowCount(df: DataFrame): Option[Long] =
+    checkpointRdd(df).flatMap(r => Option(knownCounts.get(r))).map(_.longValue)
 
   /** Size-gated broadcast hint: hint only when the frame's MEASURED
     * row count is under [[BroadcastMaxRowsKey]] (the r5 Bloom-gate
     * precedent — decide from data, not hope), else return the frame
     * unhinted and let the join shuffle (AQE still converts it back to
     * a broadcast join at runtime when measured sizes allow). The count
-    * is served from the [[countedCheckpoint]] memo when the frame is a
+    * is served from the [[materialize]] memo when the frame is a
     * projection of one — zero jobs; otherwise it is an action, and
     * callers must pass a frame that is cheap to count — checkpointed,
     * artifact-backed, or a bounded aggregate — never a raw corpus
@@ -293,13 +308,12 @@ object Sampling {
     // (group, bucket) — with 256 buckets per group that stays
     // skew-split-able however hot one group is.
     val offW = Window.partitionBy(groupCols.map(col): _*).orderBy(col("__b"))
-    // countedCheckpoint: ONE job materializes the offsets AND serves
-    // the broadcast gate's row count (the eager checkpoint + separate
-    // gate count was two).
-    val offsets = trackScratch(countedCheckpoint(counts
+    // materialize: ONE job fills the offsets AND serves the broadcast
+    // gate's row count
+    val offsets = materialize(counts
       .withColumn("__off",
         coalesce(sum(col("__cnt")).over(offW) - col("__cnt"), lit(0L)))
-      .drop("__cnt")))
+      .drop("__cnt"))
     val inBucketW = Window
       .partitionBy((groupCols :+ "__b").map(col): _*)
       .orderBy(col("__h"), tieCol)
@@ -334,13 +348,13 @@ object Sampling {
     * `sortCols`), not a doc-comment convention a caller can silently
     * drop.
     *
-    * The INPUT is localCheckpointed (it is expected to be a narrow
+    * The INPUT is materialized (it is expected to be a narrow
     * projection — ids + sort keys, not raw text): repartitionByRange
     * first runs a boundary-SAMPLING pass over its child, which would
     * re-execute an expensive upstream (measured +4 s on ss_centrality's
     * PageRank chain at 20×).
     *
-    * The RANGED frame (with its `__pid` stamp) is then checkpointed
+    * The RANGED frame (with its `__pid` stamp) is then materialized
     * TOO, and this one is load-bearing for correctness, not cost: the
     * offsets branch and the rank branch must see the SAME partition
     * boundaries, but the range exchange's boundary sampling is seeded
@@ -358,10 +372,9 @@ object Sampling {
     // session conf accessor, not the raw string: platforms that set the
     // conf to "auto" would throw in a bare .toInt
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = trackScratch(trackScratch(df.localCheckpoint(true))
+    val ranged = materialize(materialize(df)
       .repartitionByRange(parts, sortCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)) // pin boundaries + __pid — see scaladoc
+      .withColumn("__pid", spark_partition_id())) // pin boundaries + __pid — see scaladoc
     val wLocal = Window.partitionBy(col("__pid")).orderBy(sortCols: _*)
     val wOrd = Window.partitionBy(pmod(col("__pid"), lit(1))).orderBy(col("__pid"))
     val pre = wOrd.rowsBetween(Window.unboundedPreceding, -1)

@@ -22,12 +22,17 @@ import org.apache.spark.sql.SparkSession
   * leaves no entry (the next `get` builds again), and every caller that
   * waited on it sees its exception. Entries of stopped sessions are
   * evicted on every access, so a dead session's checkpoint blocks are not
-  * pinned for the JVM's lifetime.
+  * pinned for the JVM's lifetime. A build marks its thread
+  * ([[building]]) for [[Sampling]]'s session-vs-scratch scope rule.
   */
 object SessionCache {
   private type Key = (SparkSession, String, String, Map[String, String])
 
   private val cells = new ConcurrentHashMap[Key, FutureTask[Any]]()
+
+  /** Builds running in this thread, nested ones included. */
+  private val depth = ThreadLocal.withInitial[Int](() => 0)
+  private[operators] def building: Boolean = depth.get > 0
 
   def get[T](spark: SparkSession, corpus: String, tag: String)(build: => T): T = {
     cells.keySet.removeIf(_._1.sparkContext.isStopped)
@@ -36,7 +41,10 @@ object SessionCache {
     val key = (spark, corpus, tag, knobs)
     val mine = new FutureTask[Any](() => build)
     val cell = cells.computeIfAbsent(key, _ => mine)
-    if (cell eq mine) mine.run()
+    if (cell eq mine) {
+      depth.set(depth.get + 1)
+      try mine.run() finally depth.set(depth.get - 1)
+    }
     try cell.get().asInstanceOf[T]
     catch {
       case e: ExecutionException =>

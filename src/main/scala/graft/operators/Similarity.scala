@@ -499,9 +499,8 @@ object Similarity {
         .select(col("q_id"), explode(graft.functions.NativeExpressions
           .knnTopK(col("qv"), col("q_id"), col("members"), TopK)).as("e"))
         .select(col("q_id"), col("e.vec_id").as("vec_id"), col("e.cos").as("cos"))
-      topKByUnsorted(partial, TopK, col("cos"),
-          round(col("cos") * 1000000, 0).cast("long").as("cos_ppm"))
-        .localCheckpoint(true)
+      Sampling.materialize(topKByUnsorted(partial, TopK, col("cos"),
+        round(col("cos") * 1000000, 0).cast("long").as("cos_ppm")))
     }
 
   /** The r14 join-form edge build — differential reference ONLY
@@ -536,7 +535,7 @@ object Similarity {
     * documented — variant; both sides implement the same one). */
   private[graft] def pageRank(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val flow = Sampling.trackScratch(edges.join(deg, "src").localCheckpoint(true))
+    val flow = Sampling.materialize(edges.join(deg, "src"))
     var ranks = nodes.select(col("vec_id"), lit(1000000L).as("r"))
     for (_ <- 1 to PrIters) {
       val contrib = flow
@@ -572,8 +571,8 @@ object Similarity {
     // re-runs the probe+score build (linear in |edges| per round).
     val edges = knnEdges(spark, sfDir)
       .select(col("q_id").as("src"), col("vec_id").as("dst"))
-    centralityOver(Sampling.trackScratch(
-      vecs(spark, sfDir).select(col("vec_id")).localCheckpoint(true)), edges)
+    centralityOver(Sampling.materialize(
+      vecs(spark, sfDir).select(col("vec_id"))), edges)
   }
 
   /** The rank/degree/ordering tail of [[ssCentrality]] over an arbitrary
@@ -968,14 +967,13 @@ object Similarity {
     * (vec_id, label, v) projection once per (session, corpus); at
     * 100 TB the same role is a persisted micro-fixed parquet artifact
     * next to the centroid artifact (write once, every chain consumer
-    * reads columnar). A [[SessionCache]] entry; NOT tracked as
-    * scratch — it is a session cache, alive across queries. */
+    * reads columnar). A [[SessionCache]] entry, so session-scoped:
+    * alive across queries, never released as scratch. */
   private def lloydsVm(spark: SparkSession, sfDir: String): DataFrame =
     SessionCache.get(spark, sfDir, "Similarity.lloydsVm") {
-      Tables.embeddings(spark, sfDir)
+      Sampling.materialize(Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("label"),
-          transform(col("embedding"), x => round(x.cast("double") * 1000000d, 0)).as("v"))
-        .localCheckpoint(true)
+          transform(col("embedding"), x => round(x.cast("double") * 1000000d, 0)).as("v")))
     }
 
   /** Seed modulus of the default Lloyd's chain: every [[LloydsSeedMod]]-th
@@ -1014,7 +1012,7 @@ object Similarity {
       val asg = vm.crossJoin(broadcast(centArr))
         .select(col("vec_id"), col("v"),
           argminL2(col("v"), col("cents")).getField("c_id").as("cluster"))
-      cents = asg
+      cents = Sampling.materialize(asg
         .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
         .groupBy(col("cluster"), col("dim"))
         // Spark floor() returns LONG — cast back so the centroid stays a
@@ -1024,8 +1022,7 @@ object Similarity {
         .groupBy(col("cluster"))
         .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
           e => e.getField("m")).as("cv"))
-        .select(col("cluster").as("c_id"), col("cv"))
-        .localCheckpoint(true)
+        .select(col("cluster").as("c_id"), col("cv")))
     }
     cents
   }
@@ -1039,7 +1036,7 @@ object Similarity {
     * seed mod): before round 7 each gate re-ran the full
     * [[LloydsIters]]-pass training — three training passes per analysis
     * suite, which at 100 TB is three corpus-scan sets for one
-    * clustering. The first caller trains and localCheckpoints the k-row
+    * clustering. The first caller trains and materializes the k-row
     * table (k·dim doubles — trivially small); later gates re-collect
     * the one-row array from those materialized blocks (a k-row keyless
     * aggregate — the re-agg is microseconds and keeps every consumer's
@@ -1052,7 +1049,7 @@ object Similarity {
   private def lloydsCentArr(spark: SparkSession, sfDir: String,
       seedMod: Int = LloydsSeedMod): DataFrame =
     SessionCache.get(spark, sfDir, s"Similarity.cent.$seedMod")(
-      lloydsCentroids(spark, sfDir, seedMod).localCheckpoint(true))
+      Sampling.materialize(lloydsCentroids(spark, sfDir, seedMod)))
       .agg(collect_list(struct(col("c_id"), col("cv"))).as("cents"))
 
   /** Trained FIXED-k centroids as the one-row broadcastable (c_id, cv)
@@ -1066,10 +1063,9 @@ object Similarity {
   private[graft] def fixedKCentArr(spark: SparkSession, sfDir: String, k: Int): DataFrame =
     SessionCache.get(spark, sfDir, s"Similarity.centK.$k") {
       val vm = lloydsVm(spark, sfDir).select(col("vec_id"), col("v"))
-      lloydsIterate(vm,
+      Sampling.materialize(lloydsIterate(vm,
         vm.filter(col("vec_id") < k)
-          .select(col("vec_id").as("c_id"), col("v").as("cv")))
-        .localCheckpoint(true)
+          .select(col("vec_id").as("c_id"), col("v").as("cv"))))
     }.agg(collect_list(struct(col("c_id"), col("cv"))).as("cents"))
 
   /** Index BUILD: train the Lloyd's centroids and persist them as a

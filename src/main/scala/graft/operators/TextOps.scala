@@ -80,7 +80,7 @@ object TextOps {
     * adjacent-pair count (weighted by word frequency, map-side
     * combinable), one 1-row argmax collect (the Lloyd's-centroid
     * pattern), one literal-replace merge pass, lineage cut per round by
-    * a tracked localCheckpoint. At 100 TB the corpus pass dominates and
+    * a scratch [[Sampling.materialize]]. At 100 TB the corpus pass dominates and
     * runs exactly once; rounds cost |vocab|, not |corpus|. */
   def txBpeTrain(spark: SparkSession, sfDir: String): DataFrame =
     bpeTrain(spark, sfDir, graft.functions.Bpe.TrainRounds)
@@ -94,12 +94,11 @@ object TextOps {
     import graft.functions.Bpe
     // Words = maximal [a-z]+ runs after the fixed ASCII fold — the
     // apply-side tokenization (Bpe.oracleExprs), NOT locale lower().
-    var vocab = Sampling.trackScratch(docsOrdered(spark, sfDir)
+    var vocab = Sampling.materialize(docsOrdered(spark, sfDir)
       .select(explode(expr(
         s"regexp_extract_all(translate(text, '${Bpe.AsciiUpper}', '${Bpe.AsciiLower}'), '([a-z]+)', 1)")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .select(regexp_replace(col("w"), "([a-z])", "[$1]").as("s"), col("cnt"))
-      .localCheckpoint(true))
+      .select(regexp_replace(col("w"), "([a-z])", "[$1]").as("s"), col("cnt")))
     val merges = Seq.newBuilder[(Long, String, String, String, Long)]
     for (r <- 1 to rounds) {
       // ALL adjacent token pairs of the bracket encoding, weighted by
@@ -120,9 +119,8 @@ object TextOps {
         s"tx_bpe_train: vocabulary exhausted before round $r — lower Bpe.TrainRounds for this corpus")
       val (p, q, c) = win(0)
       merges += ((r.toLong, p, q, p + q, c))
-      vocab = Sampling.trackScratch(vocab
-        .select(expr(s"replace(s, '[$p][$q]', '[$p$q]')").as("s"), col("cnt"))
-        .localCheckpoint(true))
+      vocab = Sampling.materialize(vocab
+        .select(expr(s"replace(s, '[$p][$q]', '[$p$q]')").as("s"), col("cnt")))
     }
     merges.result().toDF("rank", "p", "q", "merged", "pair_count")
       .orderBy(col("rank"))
@@ -307,10 +305,10 @@ object TextOps {
       // broadcast keeps the corpus side a map-only scan + explode
       // feeding a map-side-combinable pair count; above the gate the
       // join shuffles ∝ benchmark size, never ∝ corpus.
-      val bench = Sampling.trackScratch(Sampling.countedCheckpoint(
+      val bench = Sampling.materialize(
         docs.filter(isBench)
           .select(col("doc_id").as("bench_id"),
-            explode(wordShingles(col("text"), ContamN)).as("s"))))
+            explode(wordShingles(col("text"), ContamN)).as("s")))
       val corpus = docs.filter(!isBench)
         .select(col("doc_id"), explode(wordShingles(col("text"), ContamN)).as("s"))
       return corpus.join(Sampling.gatedBroadcast(bench), "s")
@@ -318,22 +316,22 @@ object TextOps {
         .agg(count(lit(1)).as("n_shared"))
         .orderBy(col("doc_id"), col("bench_id"))
     }
-    val groups = Sampling.trackScratch(Sampling.countedCheckpoint(docs
+    val groups = Sampling.materialize(docs
       .groupBy(md5(col("text")).as("tkey"))
       .agg(min(col("doc_id")).as("rep_id"),
         sort_array(collect_list(when(!isBench, col("doc_id")))).as("cids"),
-        sort_array(collect_list(when(isBench, col("doc_id")))).as("bids"))))
+        sort_array(collect_list(when(isBench, col("doc_id")))).as("bids")))
     // one shingle pass over DISTINCT texts (rep scan: the gated rep-id
     // broadcast keeps the documents scan map-side; checkpointed — both
     // sides of the shingle match read it)
-    val sh = Sampling.trackScratch(Sampling.countedCheckpoint(
+    val sh = Sampling.materialize(
       Tables.documents(spark, sfDir)
         .join(Sampling.gatedBroadcast(groups.select(
           col("rep_id").as("doc_id"), col("tkey"),
           (size(col("cids")) > 0).as("hasC"), (size(col("bids")) > 0).as("hasB"))),
           "doc_id")
         .select(col("tkey"), col("hasC"), col("hasB"),
-          explode(wordShingles(col("text"), ContamN)).as("s"))))
+          explode(wordShingles(col("text"), ContamN)).as("s")))
     val textPairs = sh.filter(col("hasC")).select(col("tkey").as("ck"), col("s"))
       .join(Sampling.gatedBroadcast(
         sh.filter(col("hasB")).select(col("tkey").as("bk"), col("s"))), "s")
@@ -373,9 +371,8 @@ object TextOps {
       .select(col("doc_id"), tokenCount(col("text")).cast("long").as("n_tokens"))
     // Materialized once: the rank pass and the per-partition totals both
     // read it (two lazy branches would re-scan + re-range-sample).
-    val ranged = Sampling.trackScratch(toks.repartitionByRange(32, col("doc_id"))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true))
+    val ranged = Sampling.materialize(toks.repartitionByRange(32, col("doc_id"))
+      .withColumn("__pid", spark_partition_id()))
     val wLocal = Window.partitionBy(col("__pid")).orderBy(col("doc_id"))
     val local = ranged.withColumn("__lcum", sum(col("n_tokens")).over(wLocal))
     val wOrd = Window.partitionBy(pmod(col("__pid"), lit(1))).orderBy(col("__pid"))
@@ -483,7 +480,7 @@ object TextOps {
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
         filter(col("toks"), t => t.isin(Bm25Query: _*)).as("qtoks"))
-      .transform(df => Sampling.trackScratch(df.localCheckpoint()))
+      .transform(Sampling.materialize)
     val stats = base.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("a_toks"))
     val posting = base
       .select(col("doc_id"), col("dl"), explode(col("qtoks")).as("tok"))
@@ -533,7 +530,7 @@ object TextOps {
     val tf = docsOrdered(spark, sfDir)
       .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-      .transform(df => Sampling.trackScratch(df.localCheckpoint()))
+      .transform(Sampling.materialize)
     val nDocs = docsOrdered(spark, sfDir).agg(count(lit(1)).as("n_docs"))
     val idf = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDocs))
@@ -584,10 +581,9 @@ object TextOps {
     }: _*)
 
   private[graft] def hhCms(docs: DataFrame): DataFrame = {
-    val tf = Sampling.trackScratch(
+    val tf = Sampling.materialize(
       docs.select(explode(tokens(col("text"))).as("tok"))
-        .groupBy(col("tok")).agg(count(lit(1)).as("tf"))
-        .localCheckpoint(true))
+        .groupBy(col("tok")).agg(count(lit(1)).as("tf")))
     val hashed = tf.select(col("tok"), col("tf"),
       posexplode(cmsHashes(col("tok"))).as(Seq("row_i", "bucket")))
     val counters = hashed.groupBy(col("row_i"), col("bucket"))
@@ -653,7 +649,7 @@ object TextOps {
       .withColumn("rank", row_number().over(w).cast("long"))
       .withColumn("cum", sum(col("tf")).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .transform(df => Sampling.trackScratch(df.localCheckpoint(true)))
+      .transform(Sampling.materialize)
     val total = ranked.agg(max(col("cum")).as("total"))
     val targets = spark.range(VocabTargets.length)
       .select(element_at(
@@ -873,16 +869,16 @@ object TextOps {
     * differentials this form against the relational scrub (kept for
     * the artifact path) and the streaming gate. */
   private[graft] def boilerplate(docs: DataFrame): DataFrame = {
-    val groups = Sampling.trackScratch(Sampling.countedCheckpoint(docs
+    val groups = Sampling.materialize(docs
       .groupBy(md5(col("text")).as("tkey"))
       .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("g"),
-        sort_array(collect_list(col("doc_id"))).as("ids"))))
+        sort_array(collect_list(col("doc_id"))).as("ids")))
     // one blockify pass over DISTINCT texts (gated rep-id broadcast
     // keeps the docs scan map-side)
-    val base = Sampling.trackScratch(Sampling.countedCheckpoint(docs
+    val base = Sampling.materialize(docs
       .join(Sampling.gatedBroadcast(
         groups.select(col("rep_id").as("doc_id"), col("tkey"), col("g"))), "doc_id")
-      .select(col("tkey"), col("g"), blockTexts(tokens(col("text"))).as("__bts"))))
+      .select(col("tkey"), col("g"), blockTexts(tokens(col("text"))).as("__bts")))
     // one row per block occurrence of a distinct text, with its in-text
     // index and a first-occurrence flag (the per-text distinct, in-row)
     def occ = base
@@ -890,16 +886,16 @@ object TextOps {
         posexplode(col("__bts")).as(Seq("bi", "bt")))
       .withColumn("__fst", array_position(col("__bts"), col("bt")) === col("bi") + 1)
       .drop("__bts")
-    val heavy = Sampling.trackScratch(Sampling.countedCheckpoint(
+    val heavy = Sampling.materialize(
       occ.filter(col("__fst")).groupBy(col("bt"))
         .agg(sum(col("g")).as("df"))
         .filter(col("df") >= BoilerMinDf)
-        .select(col("bt"))))
+        .select(col("bt")))
     // heavy-hit block indices per distinct text — ints
-    val hits = Sampling.trackScratch(Sampling.countedCheckpoint(
+    val hits = Sampling.materialize(
       occ.join(Sampling.gatedBroadcast(heavy), "bt")
         .groupBy(col("tkey"))
-        .agg(sort_array(collect_list(col("bi"))).as("__hidx"))))
+        .agg(sort_array(collect_list(col("bi"))).as("__hidx")))
     val scrubText = base
       .join(Sampling.gatedBroadcast(hits), Seq("tkey"), "left")
       .withColumn("__hidx",

@@ -56,7 +56,7 @@ class ComponentsSpec extends SparkSpec {
   private def labelGraph(reps: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
     labelsOf(Dedup.labelComponents(reps.toDF("rep_id"),
-      Sampling.countedCheckpoint(edges.map { case (a, b) =>
+      Sampling.materialize(edges.map { case (a, b) =>
         (math.min(a, b), math.max(a, b)) }.toDF("a", "b"))))
   }
 
@@ -129,9 +129,10 @@ class ComponentsSpec extends SparkSpec {
       jobsDuring(Dedup.ddDecisions(spark, dir).queryExecution.analyzed))
     val (_, loopJobs) = withFreshCorpus(dir =>
       withGate(0)(jobsDuring(Dedup.ddDecisions(spark, dir))))
-    // fp checkpoint + fp groups + counted edge checkpoint (AQE runs each
-    // shuffle as its own job) + one edge collect — no per-round jobs
-    assert(localJobs <= 10, s"local component build launched $localJobs jobs")
+    // fp, fp-group and edge materializations (one job each, plus AQE
+    // running each shuffle below them as its own job) + one edge
+    // collect — no per-round jobs
+    assert(localJobs <= 8, s"local component build launched $localJobs jobs")
     assert(loopJobs > localJobs,
       s"distributed build ($loopJobs jobs) is not above the local one ($localJobs)")
     assert(analyzed.collectFirst { case l: LocalRelation => l }.nonEmpty,

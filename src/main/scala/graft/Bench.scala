@@ -19,9 +19,9 @@ object Bench {
     val spark = SessionTuning.suiteSession()
     // Scale knob passthrough: at stress densities the fixture's K = N/50
     // centroid rule makes the IVF family's N·K assignment quadratic —
-    // see Similarity.MaxCentroidsKey. Unset = oracle-parity default.
+    // see Knobs.maxCentroids. Unset = oracle-parity default.
     sys.env.get("SPARK_GRAFT_MAX_CENTROIDS").foreach { k =>
-      spark.conf.set(graft.operators.Similarity.MaxCentroidsKey, k)
+      spark.conf.set(Knobs.maxCentroids.key, k)
     }
     // Generic runtime-conf passthrough for controlled A/B probes
     // (e.g. graft.presentation=off to time a query minus its
@@ -34,6 +34,7 @@ object Bench {
     sys.env.get("SPARK_GRAFT_SESSION_CONF").foreach {
       SessionTuning.parseSessionConf(_).foreach { case (k, v) => spark.conf.set(k, v) }
     }
+    Knobs.values(spark) // a malformed or unknown knob fails before the suite runs
 
     def runOnce(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)

@@ -149,18 +149,18 @@ object Pipeline {
     entries.sorted.toSeq
   }
 
-  /** A stage's signature: sha256 over the stage name, the session values
-    * of the result-affecting knobs that can change it
-    * ([[SessionTuning.resultKnobsOf]]), its upstream stages' signatures
-    * (a composed stage is stale when any input artifact is) and the
-    * input listing. Shape-only knobs are not hashed: they change plans,
-    * never results. */
-  private def signature(spark: SparkSession, stage: String, listing: Seq[String],
+  /** A stage's signature: sha256 over the stage name, the parsed values
+    * of the knobs that can change its result (those whose `stages` name
+    * it, from [[Knobs.values]]), its upstream stages' signatures (a
+    * composed stage is stale when any input artifact is) and the input
+    * listing. Shape-only knobs are not hashed: they change plans, never
+    * results. */
+  private def signature(stage: String, knobs: Seq[(Knob[_], Any)], listing: Seq[String],
       upstreamSignatures: Seq[String]): String = {
     val md = MessageDigest.getInstance("SHA-256")
     md.update(stage.getBytes("UTF-8"))
-    SessionTuning.resultKnobsOf(stage).foreach { k =>
-      md.update(s"|$k${spark.conf.getOption(k).fold("")("=" + _)}".getBytes("UTF-8"))
+    knobs.foreach { case (k, v) =>
+      if (k.stages(stage)) md.update(s"|${k.key}=$v".getBytes("UTF-8"))
     }
     upstreamSignatures.foreach(s => md.update(s"|$s".getBytes("UTF-8")))
     listing.foreach(e => md.update(e.getBytes("UTF-8")))
@@ -197,7 +197,10 @@ object Pipeline {
     *
     * With `incremental = true`, a stage whose signature matches the
     * previous run's manifest AND whose artifact still exists is skipped
-    * (reference: utils/manifest.py should_skip). */
+    * (reference: utils/manifest.py should_skip).
+    *
+    * A malformed or unknown session knob ([[Knobs.values]]) fails the
+    * run before any job. */
   def run(
       spark: SparkSession,
       sfDir: String,
@@ -205,6 +208,7 @@ object Pipeline {
       runId: String,
       stages: Seq[String] = defaultStages,
       incremental: Boolean = false): DataFrame = {
+    val knobs = Knobs.values(spark)
     import spark.implicits._
     val unknown = stages.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown pipeline stages: ${unknown.mkString(", ")}")
@@ -228,7 +232,7 @@ object Pipeline {
       compositions.get(stage).fold(Seq.empty[String])(_._1)
     val listing = inputListing(spark, sfDir)
     def signatureOf(stage: String): String =
-      signature(spark, stage, listing, upstreams(stage).map(signatureOf))
+      signature(stage, knobs, listing, upstreams(stage).map(signatureOf))
     val signatures = stages.map(s => s -> signatureOf(s)).toMap
 
     val sc = spark.sparkContext

@@ -46,6 +46,7 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    Knobs.values(spark) // a malformed or unknown knob fails before planning
 
     def count(p: SparkPlan)(f: PartialFunction[SparkPlan, Unit]): Int =
       p.collect(f.andThen(_ => 1)).sum

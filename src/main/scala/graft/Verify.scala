@@ -14,6 +14,9 @@ object Verify {
     // the driver runs the full set.
     val only = sys.env.get("SPARK_GRAFT_ONLY").flatMap(SparkEntry.queryNames)
     val spark = SessionTuning.suiteSession()
+    // a malformed or unknown knob (e.g. a --conf passed to the JVM) fails
+    // before any query instead of failing each one
+    Knobs.values(spark)
     new java.io.File(outDir).mkdirs()
     val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }

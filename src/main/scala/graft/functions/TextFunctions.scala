@@ -21,10 +21,6 @@ object TextFunctions {
 
   def tokenCount(c: Column): Column = size(tokens(c))
 
-  /** Vocabulary richness: distinct token count (reference:
-    * features/text_stats.py:analyze_vocabulary_usage). */
-  def distinctTokenCount(c: Column): Column = size(array_distinct(tokens(c)))
-
   /** BPE-ish subword count: word chunks of <=4 chars + punctuation marks,
     * approximating a byte-pair tokenizer's piece count (native char walk;
     * mirror: regexp_count over "[A-Za-z0-9]{1,4}|[^A-Za-z0-9\s]"). */
@@ -204,8 +200,4 @@ object TextFunctions {
     * array_contains scan per token). */
   def tokenSetCount(c: Column, set: Seq[String]): Column =
     NativeExpressions.tokenSetCount(tokens(c), set)
-
-  /** Word-boundary occurrence count of a literal word. */
-  def wordCount(c: Column, w: String): Column =
-    regexp_count(c, lit("\\b" + java.util.regex.Pattern.quote(w) + "\\b"))
 }

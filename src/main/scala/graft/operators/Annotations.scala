@@ -69,9 +69,6 @@ object Annotations {
       .when(array_contains(tks, "spark"), "announcement")
       .otherwise(pick(StructureLabels, hashBucket(t, 9)))
 
-  /** Structure label column (shared with p18's prompt assembly). */
-  private[operators] def structureCol: Column = structureColOf(toks)
-
   /** p03: structure classification — keyword rules first, md5-bucket
     * fallback over the 9-label taxonomy; empty text → 'unknown'
     * (3-extract-structures.py:60-75 semantics, heuristic re-expression). */

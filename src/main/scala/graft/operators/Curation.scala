@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Knobs, Tables}
 import graft.functions.TextFunctions._
 
 /** Corpus-curation operators: the rule-based quality gate, unigram-LM
@@ -300,7 +300,7 @@ object Curation {
     * cutoffs are one groupBy(source) percentile — |sources|×2 doubles —
     * broadcast back onto the scored stream. Exact percentile buffers a
     * source's scores at gate scale; at 100 TB set
-    * [[graft.functions.Quantiles.ApproxKey]] and the same call site
+    * [[graft.Knobs.approxQuantiles]] and the same call site
     * emits approx_percentile (bounded sketch state per source), exactly
     * like p01's cutoffs. */
   def txCcnetBucket(spark: SparkSession, sfDir: String): DataFrame = {
@@ -477,7 +477,7 @@ object Curation {
       .select(col("doc_id"), col("component"), col("dedup_keep"), col("gopher_keep"),
         coalesce(col("__contam"), lit(0L)).as("contaminated"),
         when(col("doc_id") % TextOps.BenchMod === 0, 1L).otherwise(0L).as("is_bench"))
-    val gateOn = spark.conf.getOption(ClassifierGateKey).contains("on")
+    val gateOn = Knobs.classifier(spark)
     val gated =
       if (!gateOn) base
       // classifierStats directly, NOT txQualityClassifier: the query
@@ -495,14 +495,6 @@ object Curation {
           (if (gateOn) col("clf_keep") === 1L else lit(true)), 1L).otherwise(0L))
       .orderBy(col("doc_id"))
   }
-
-  /** Session knob: "on" adds the learned-classifier gate
-    * ([[txQualityClassifier]]'s clf_keep) as a fifth conjunct in
-    * [[curVerdict]]'s train_keep AND a clf_keep output column. Default
-    * off — the oracle-gated cur_verdict row is the rule-gate
-    * composition; the classifier is the optional CCNet-style second
-    * stage a production stack toggles per-corpus. */
-  val ClassifierGateKey = "graft.curation.classifier"
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "tx_gopher"     -> (txGopher _),

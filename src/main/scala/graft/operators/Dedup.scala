@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.Tables
+import graft.{Knobs, Tables}
 import graft.functions.{Aggregates, NativeExpressions}
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
@@ -152,15 +152,6 @@ object Dedup {
   // in 8M bits ≈ 3% FP; grow both with the expected candidate count.
   val BloomItems = 1000000L
   val BloomBits = 8388608L
-  // The bloom path engages only when the documents scan is at least this
-  // large — the same heuristic as Spark's own InjectRuntimeFilter
-  // (applicationSideScanSizeThreshold, 10 GB default): below it the two
-  // pruned rescans are cheaper than the three extra driver sync points
-  // the sketch costs (measured: +1.4 s fixed at ≤100k docs, while the
-  // saved shingle passes amortize to milliseconds on 32 cores). Override
-  // with the conf key for tests / small-cluster tuning.
-  val BloomMinScanBytesKey = "spark.graft.bloomPrune.minScanBytes"
-  val BloomMinScanBytesDefault = 10L << 30
 
   /** dd_minhash_lsh: MinHash signatures → LSH band join → verified
     * Jaccard pairs. Shuffles: band-key join + pair distinct + two id
@@ -186,7 +177,7 @@ object Dedup {
     * non-candidates never pay tokenization. The candidate table is
     * eagerly checkpointed: the bloom branch and the verify join would
     * otherwise each re-run the band self-join lineage. Gated on scan
-    * size ([[BloomMinScanBytesKey]]) — below the threshold the plain
+    * size ([[Knobs.bloomMinScanBytes]]) — below the threshold the plain
     * rescans win.
     *
     * The verified COMPACT frames are session-cached — the rep-level
@@ -295,9 +286,7 @@ object Dedup {
       .join(Sampling.gatedBroadcast(groups.select(col("rep_id").as("doc_id"))), "doc_id")
     val shPlain = repScan.select(col("doc_id"),
       NativeExpressions.wordShingles(col("text"), 3).as("sh"))
-    val bloomOn = docScanBytes(spark, sfDir) >= spark.conf
-      .getOption(BloomMinScanBytesKey).map(_.toLong)
-      .getOrElse(BloomMinScanBytesDefault)
+    val bloomOn = docScanBytes(spark, sfDir) >= Knobs.bloomMinScanBytes(spark)
     // below the bloom threshold the rep shingle table is small enough to
     // checkpoint once and serve signatures, verify, AND the within-group
     // Jaccard — zero tokenize rescans; above it, stay lazy and prune the
@@ -422,7 +411,7 @@ object Dedup {
     SessionCache.get(spark, sfDir, "Dedup.ngram") {
       // replica-collapsed blocker (r16) — the cached frame is the
       // thresholded compact output, sorted by the gate entry below
-      Sampling.materialize(ddNgramJaccardOf(spark, Tables.documents(spark, sfDir)))
+      ddNgramJaccardOf(spark, Tables.documents(spark, sfDir))
     }.orderBy(col("id_a"), col("id_b"))
 
   /** [[ddNgramJaccard]] over any (doc_id, text) frame — the
@@ -432,7 +421,7 @@ object Dedup {
       itemsOf = NativeExpressions.wordShingles(_, 3), cap = MaxShingleDf,
       textFilter =
         expr("inter * 1000000L div (n_a + n_b - inter)") >= JaccardThresholdPpm,
-      sortCols = Seq("id_a", "id_b"), presentSorted = false)(
+      sortCols = Seq("id_a", "id_b"), materialize = true)(
       _.withColumn("j_ppm", expr("inter * 1000000L div (n_a + n_b - inter)"))
         .select(col("id_a"), col("id_b"), col("inter"), col("j_ppm")))
 
@@ -531,9 +520,7 @@ object Dedup {
     // dark exactly where it mattered. Density is the signal the
     // collapse actually trades on.
     val (nDocs, nDistinct) = Sampling.textDensity(Tables.documents(spark, sfDir))
-    val bloomOn = docScanBytes(spark, sfDir) >= spark.conf
-      .getOption(BloomMinScanBytesKey).map(_.toLong)
-      .getOrElse(BloomMinScanBytesDefault)
+    val bloomOn = docScanBytes(spark, sfDir) >= Knobs.bloomMinScanBytes(spark)
     if (nDocs < 2L * nDistinct && !bloomOn) {
       // Low-duplication, small-corpus path — ONE text pass (the
       // [[ddMinhashEstimate]] lesson): fingerprint + shingles +
@@ -547,7 +534,7 @@ object Dedup {
       incrementalAgainst(sig.filter(newP),
         sig.filter(!newP).withColumnRenamed("doc_id", "b_id"))
     } else if (nDocs < 2L * nDistinct) {
-      // Low-duplication LARGE corpus (scan past [[BloomMinScanBytesKey]]
+      // Low-duplication LARGE corpus (scan past [[Knobs.bloomMinScanBytes]]
       // with nothing to collapse): keep the per-document shape but never
       // materialize a corpus of shingle arrays — the checkpoint holds
       // fp + sigs only, candidates come from signatures alone, and a
@@ -795,7 +782,7 @@ object Dedup {
     * expand output-bound from the compact text-pair frame with the
     * r15 dd_simhash budgeting: closed-form pair count -> repartition
     * to ceil(bytes/128 MB), size-gated broadcasts, range-partitioned
-    * presentation sort, [[Sampling.PresentationKey]] skip. */
+    * presentation sort, [[Knobs.presentation]] skip. */
   private[graft] def ddSubstringOf(spark: SparkSession, docs: DataFrame,
       cap: Int): DataFrame =
     // wordShingles' short-text fallback emits the WHOLE document as one
@@ -834,7 +821,7 @@ object Dedup {
     * quadratic doc expansion, which is output-budgeted the r15
     * dd_simhash way: closed-form pair count -> repartition to
     * ceil(bytes/128 MB), nDocs-gated broadcasts, range-partitioned
-    * presentation sort behind [[Sampling.PresentationKey]].
+    * presentation sort behind [[Knobs.presentation]].
     * `project` maps the expanded (id_a, id_b, inter, n_a, n_b) frame
     * (n follows the doc through the swap) to the operator's output.
     * CONTRACT: `project` must be a NARROW row-wise transform
@@ -844,14 +831,16 @@ object Dedup {
     * silently destroy the range partitioning the sorted output
     * depends on (every current caller is a bare select/withColumn;
     * SubstringCollapseSpec's order pins cover them — a new caller
-    * must keep the contract or use `presentSorted = false`).
-    * `presentSorted = false` skips the final sort for callers that
-    * cache the compact frame and sort outside. */
+    * must keep the contract or use `materialize = true`).
+    * `materialize = true` is for a session-cache build that sorts
+    * outside: it skips the final sort, returns the pairs materialized,
+    * and releases the build's own `tidDf`/`textPairs` checkpoints,
+    * which the materialized result no longer reads. */
   private[graft] def collapsedBoundedPairs(spark: SparkSession,
       docs: DataFrame, itemsOf: Column => Column, cap: Int,
       textKeep: Column => Column = _ => lit(true),
       textFilter: Column, sortCols: Seq[String],
-      presentSorted: Boolean = true)(
+      materialize: Boolean = false)(
       project: DataFrame => DataFrame): DataFrame = {
     import graft.functions.Aggregates.collectBounded
     val keyed = docs.select(col("doc_id"), md5(col("text")).as("tkey"), col("text"))
@@ -862,7 +851,7 @@ object Dedup {
     // served from the materialize memo — the materializing scan IS the
     // count job
     val nDocs = Sampling.knownRowCount(tidDf).getOrElse(tidDf.count())
-    val maxBroadcastRows = Sampling.broadcastMaxRows(spark)
+    val maxBroadcastRows = Knobs.broadcastMaxRows(spark)
     // one size-gate decision for every corpus-cardinality hint below
     // (each gated frame is ≤ nDocs rows) — the ddSimhashPairs pattern
     def gated(df: DataFrame): DataFrame =
@@ -909,7 +898,7 @@ object Dedup {
           .otherwise(col("ga") * col("gb")).as("c"))
       .agg(coalesce(sum(col("c")), lit(0L))).head.getLong(0)
     val pairsPerTask = (128L << 20) / 40L
-    val defaultParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val defaultParts = spark.sessionState.conf.numShufflePartitions
     val parts = math.max(defaultParts.toLong,
       math.min(Int.MaxValue.toLong, totalPairs / pairsPerTask + 1)).toInt
     // within-text doc pairs: identical docs share every capped item;
@@ -937,12 +926,14 @@ object Dedup {
     val pairs = project(within.unionByName(cross))
     // presentation sort at output scale: range-partitioned to `parts`
     // (≤128 MB per sort task); production sinks skip it via the knob
-    val preRangeMin = spark.conf.getOption(Sampling.PreRangeMinPairsKey)
-      .map(_.toLong).getOrElse(Sampling.PreRangeMinPairsDefault)
-    if (!presentSorted ||
-        spark.conf.getOption(Sampling.PresentationKey).contains("off")) pairs
+    if (materialize) {
+      val out = Sampling.materialize(pairs)
+      Sampling.release(tidDf)
+      Sampling.release(textPairs)
+      out
+    } else if (!Knobs.presentation(spark)) pairs
     else if (sortCols == Seq("id_a", "id_b") && nDocs <= maxBroadcastRows &&
-        totalPairs >= preRangeMin) {
+        totalPairs >= Knobs.preRangeMinPairs(spark)) {
       // Pre-ranged presentation (r16, the dd_simhash pattern): ranging
       // the quadratic output is double work — repartitionByRange
       // samples its child by re-running the lineage, so the full doc
@@ -1106,7 +1097,7 @@ object Dedup {
     * so the quadratic output flows through exactly one sort (the gate's
     * ORDER BY) and nothing else. */
   def ddSimhash(spark: SparkSession, sfDir: String): DataFrame =
-    ddSimhashPairs(spark, sfDir, Sampling.broadcastMaxRows(spark))
+    ddSimhashPairs(spark, sfDir, Knobs.broadcastMaxRows(spark))
 
   /** [[ddSimhash]] at an arbitrary broadcast-row gate — the seam
     * PlanAuditSpec drives to 0 to prove the shuffle fallback plans no
@@ -1158,7 +1149,7 @@ object Dedup {
     // budget exists for; r15 advice), clamped to Int range.
     val bytesPerRow = 24L
     val pairsPerTask = (128L << 20) / bytesPerRow
-    val defaultParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val defaultParts = spark.sessionState.conf.numShufflePartitions
     val parts = math.max(defaultParts.toLong,
       math.min(Int.MaxValue.toLong, totalPairs / pairsPerTask + 1)).toInt
     // cross-fp doc pairs: two gated equi-joins, output-bound; fp
@@ -1186,14 +1177,12 @@ object Dedup {
         lit(0L).as("hamming"))
     val pairs = within.unionByName(cross)
     // Production sinks don't need the quadratic output globally ordered
-    // — the same [[Sampling.PresentationKey]] contract every
+    // — the same [[Knobs.presentation]] contract every
     // presentSorted call site honors (this is the suite's single
     // largest presentation sort, so the knob matters most here; the
     // sort exists only for the oracle gate's deterministic dump).
-    if (spark.conf.getOption(Sampling.PresentationKey).contains("off")) pairs
-    else if (nDocs <= maxBroadcastRows && totalPairs >= spark.conf
-        .getOption(Sampling.PreRangeMinPairsKey).map(_.toLong)
-        .getOrElse(Sampling.PreRangeMinPairsDefault))
+    if (!Knobs.presentation(spark)) pairs
+    else if (nDocs <= maxBroadcastRows && totalPairs >= Knobs.preRangeMinPairs(spark))
       // Presentation path below the gate (r16): ranging the QUADRATIC
       // output is double work — repartitionByRange samples its child by
       // re-running the lineage, so the ~10⁹-row expansion executed
@@ -1317,7 +1306,7 @@ object Dedup {
     * Shape decided from the MEASURED rep-edge set (the
     * [[Sampling.gatedBroadcast]] rule): one [[Sampling.materialize]]
     * job fills the distinct rep edges and memoizes their count. At
-    * or under [[Sampling.BroadcastMaxRowsKey]] the edges are collected
+    * or under [[Knobs.broadcastMaxRows]] the edges are collected
     * (one job over the cached blocks) and labeled by a driver-side
     * union-find whose roots are component minima — a fixed job count
     * however deep the components are, where the distributed loop pays

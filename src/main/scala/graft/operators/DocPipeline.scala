@@ -46,7 +46,7 @@ object DocPipeline {
     val eng = Tables.documents(spark, sfDir)
       .select(col("doc_id"), engagementPpm.as("ratio_ppm"))
     // Pass 1: two scalars. Exact percentile by default (oracle parity); at
-    // 100 TB set Quantiles.ApproxKey on the session — the same call sites
+    // 100 TB set Knobs.approxQuantiles on the session — the same call sites
     // emit approx_percentile with bounded sketch state, same plan shape.
     val cuts = eng.agg(
       Quantiles.pctl(spark, "ratio_ppm", 0.80).as("top_cut"),

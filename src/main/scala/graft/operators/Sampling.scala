@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Knobs
 import graft.functions.TextFunctions.nibble
 
 /** Materialization, measured-count gates and scalable ranking.
@@ -67,12 +68,12 @@ object Sampling {
     *
     * The checkpoint is per-query scratch ([[releaseScratch]]) unless
     * taken inside a session-cache build; a production job should not
-    * be here at all: set [[PresentationKey]] to "off".
+    * be here at all: set [[Knobs.presentation]] off.
     *
     * PRODUCTION KNOB: at 100 TB a presentation ORDER BY should not
     * exist — a partitioned sink ([[graft.sources.Sinks]]) repartitions
     * on its own keys and a global sort of the corpus is pure waste.
-    * `spark.conf.set(PresentationKey, "off")` makes this a no-op
+    * `graft.presentation=off` makes this a no-op
     * (no checkpoint, no sort): operators return their computed frame
     * unsorted and nothing is pinned to executor storage. The oracle
     * gate and bench leave it unset (the sorted form IS the gated
@@ -80,7 +81,7 @@ object Sampling {
     * pre-checkpoint plan (a LogicalRDD would otherwise hide the
     * projection from the kernel-budget and cross-join assertions). */
   def presentSorted(df: DataFrame, keys: Column*): DataFrame =
-    if (df.sparkSession.conf.getOption(PresentationKey).contains("off")) df
+    if (!Knobs.presentation(df.sparkSession)) df
     else materializeLazily(df).orderBy(keys: _*)
 
   /** Checkpoint `df` and count it in one job: the count of the lazy
@@ -179,38 +180,6 @@ object Sampling {
     }
   }
 
-  /** Session knob: "off" disables the presentation checkpoint+sort —
-    * the production-sink path. Unset (default) keeps the gated form. */
-  val PresentationKey = "graft.presentation"
-
-  /** Corpus-cardinality frames may be broadcast ONLY below this
-    * measured row count: BroadcastExchange has hard ceilings (8 GB /
-    * 512M rows) and pins a driver collect plus one copy per executor,
-    * so an unconditional hint on a corpus-growing frame is a
-    * guaranteed abort at 10^10+ docs however well it measures on a
-    * sandbox corpus (r15 verdict). 4M rows ≈ 64 MB at ~16 B/row —
-    * comfortably inside every ceiling, far above any oracle SF.
-    * Override with the conf key for tests / cluster tuning;
-    * PlanAuditSpec drives it to 0 to prove every gated site degrades
-    * to a scale-safe shuffle equi-join. */
-  val BroadcastMaxRowsKey = "spark.graft.broadcastMaxRows"
-  val BroadcastMaxRowsDefault = 4L << 20
-
-  /** Minimum closed-form pair count at which a quadratic pair output's
-    * presentation sort switches to the pre-ranged expansion (range-
-    * exchange the small pre-expansion stream, expand inside the ranged
-    * partitions) instead of range-partitioning the output itself —
-    * repartitionByRange samples its child by re-running the lineage, so
-    * the output-ranged form generates the quadratic output TWICE and
-    * shuffles it whole. The crossover is output-sized: at the 100×
-    * corpus the pre-ranged form took dd_simhash 134.6→32.3 s (984M
-    * pairs) and dd_substring 52.9→8.7 s (23M), but its two extra
-    * fixed exchanges LOST on dd_winnow's 15k-pair output (4.9→11.3 s).
-    * Default ≈ one 128 MB sort task of pairs: below that the output
-    * shuffle is noise and the fixed overhead can never pay. */
-  val PreRangeMinPairsKey = "spark.graft.preRangeMinPairs"
-  val PreRangeMinPairsDefault = 4L << 20
-
   /** Row counts of [[materialize]]d checkpoints, keyed by the
     * checkpoint RDD. Weak keys: once the Dataset (and so its RDD) is
     * unreachable the entry GCs with it — the map never pins a released
@@ -224,7 +193,7 @@ object Sampling {
     checkpointRdd(df).flatMap(r => Option(knownCounts.get(r))).map(_.longValue)
 
   /** Size-gated broadcast hint: hint only when the frame's MEASURED
-    * row count is under [[BroadcastMaxRowsKey]] (the r5 Bloom-gate
+    * row count is under [[Knobs.broadcastMaxRows]] (the r5 Bloom-gate
     * precedent — decide from data, not hope), else return the frame
     * unhinted and let the join shuffle (AQE still converts it back to
     * a broadcast join at runtime when measured sizes allow). The count
@@ -236,19 +205,13 @@ object Sampling {
   def gatedBroadcast(df: DataFrame): DataFrame =
     if (underBroadcastGate(df)) broadcast(df) else df
 
-  /** The session's [[BroadcastMaxRowsKey]] gate (default
-    * [[BroadcastMaxRowsDefault]]). */
-  private[graft] def broadcastMaxRows(spark: SparkSession): Long =
-    spark.conf.getOption(BroadcastMaxRowsKey).map(_.toLong)
-      .getOrElse(BroadcastMaxRowsDefault)
-
   /** The one gate decision behind [[gatedBroadcast]] and every other
     * decide-from-data site that may move a frame to the driver or to
     * every executor: is `df`'s MEASURED row count within
-    * [[BroadcastMaxRowsKey]]? Same count rules as [[gatedBroadcast]]
+    * [[Knobs.broadcastMaxRows]]? Same count rules as [[gatedBroadcast]]
     * (memo first, else an action). */
   private[graft] def underBroadcastGate(df: DataFrame): Boolean =
-    knownRowCount(df).getOrElse(df.count()) <= broadcastMaxRows(df.sparkSession)
+    knownRowCount(df).getOrElse(df.count()) <= Knobs.broadcastMaxRows(df.sparkSession)
 
   /** PLANNING-estimate-gated broadcast hint for frames that are plain
     * scans/filters of a stored table (no checkpoint to count): hint
@@ -264,7 +227,7 @@ object Sampling {
     * relation), still orders of magnitude inside the 8 GB ceiling at
     * the 64 MB default gate. */
   def statsGatedBroadcast(df: DataFrame): DataFrame = {
-    val maxBytes = BigInt(broadcastMaxRows(df.sparkSession)) * 16
+    val maxBytes = BigInt(Knobs.broadcastMaxRows(df.sparkSession)) * 16
     if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBytes)
       broadcast(df)
     else df

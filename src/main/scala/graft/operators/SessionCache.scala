@@ -8,11 +8,12 @@ import org.apache.spark.sql.SparkSession
   * frame, a trained centroid table) shared by every query of a session
   * over one corpus.
   *
-  * An entry is keyed by (session, corpus dir, tag, the session's value of
-  * every [[graft.SessionTuning.Knobs]] key), so a build made under one
-  * knob setting never serves a caller under another. Tags are prefixed by
-  * the owning object (`Dedup.simhash.fp`) and carry the build's non-knob
-  * parameters (`Similarity.cent.50`).
+  * An entry is keyed by (session, corpus dir, tag, the session's parsed
+  * value of every knob, [[graft.Knobs.values]]), so a build made under
+  * one knob setting never serves a caller under another, while a knob
+  * left unset and one set to its default share an entry. Tags are
+  * prefixed by the owning object (`Dedup.simhash.fp`) and carry the
+  * build's non-knob parameters (`Similarity.cent.50`).
   *
   * Each entry is a once-cell: the map only inserts the empty cell, and
   * `build` runs in the first caller's thread, outside the map. Concurrent
@@ -26,7 +27,7 @@ import org.apache.spark.sql.SparkSession
   * ([[building]]) for [[Sampling]]'s session-vs-scratch scope rule.
   */
 object SessionCache {
-  private type Key = (SparkSession, String, String, Map[String, String])
+  private type Key = (SparkSession, String, String, Seq[Any])
 
   private val cells = new ConcurrentHashMap[Key, FutureTask[Any]]()
 
@@ -36,9 +37,7 @@ object SessionCache {
 
   def get[T](spark: SparkSession, corpus: String, tag: String)(build: => T): T = {
     cells.keySet.removeIf(_._1.sparkContext.isStopped)
-    val knobs = graft.SessionTuning.Knobs.keys
-      .flatMap(k => spark.conf.getOption(k).map(k -> _)).toMap
-    val key = (spark, corpus, tag, knobs)
+    val key = (spark, corpus, tag, graft.Knobs.values(spark).map(_._2))
     val mine = new FutureTask[Any](() => build)
     val cell = cells.computeIfAbsent(key, _ => mine)
     if (cell eq mine) {

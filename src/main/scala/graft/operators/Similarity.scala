@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Knobs, Tables}
 import graft.functions.NativeExpressions.{cosineSim, l2SqDist}
 import graft.functions.VectorFunctions._
 
@@ -97,32 +97,24 @@ object Similarity {
     vecs(spark, sfDir).filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
 
-  /** Session knob: cap the seed-centroid count (the IVF nlist). UNSET —
-    * the default, and what every oracle-gated run uses — keeps the
-    * fixture rule below (every 50th vector, so K = N/50: deterministic
-    * and SQL-mirrorable, fine at test SFs). At scale K must be a CONFIG,
-    * not a corpus fraction: the corpus→centroid assignment and the
-    * corpus-as-queries probe ranking each cost N·K flops, so K ∝ N makes
-    * the IVF family quadratic — measured at the 100× stress corpus
-    * (K = 4000): ss_knn_graph 305.7 s, ss_ivf_pq 152.9 s, vs linear with
-    * the cap (BASELINE.md 100× table). Production IVF sets nlist ≈ √N
-    * (FAISS guidance); set this key to that budget and the same plans
-    * use the deterministic K-prefix of the seed set. */
-  val MaxCentroidsKey = "graft.similarity.maxCentroids"
-
   /** Keep the deterministic K-prefix of an every-`mod`th-vector seed
-    * frame when [[MaxCentroidsKey]] is set (vec_id < mod·K); unset =
-    * the fixture rule untouched. Shared by the IVF seed set and the
-    * Lloyd's-family initial seeds, so ONE knob caps every N·K
-    * assignment in the suite. */
+    * frame when [[Knobs.maxCentroids]] is set (vec_id < mod·K); unset —
+    * the default, and what every oracle-gated run uses — leaves the
+    * fixture rule (K = N/mod: deterministic and SQL-mirrorable, fine at
+    * test SFs) untouched. At scale K must be a CONFIG, not a corpus
+    * fraction: the corpus→centroid assignment and the corpus-as-queries
+    * probe ranking each cost N·K flops, so K ∝ N makes the IVF family
+    * quadratic — measured at the 100× stress corpus (K = 4000):
+    * ss_knn_graph 305.7 s, ss_ivf_pq 152.9 s, vs linear with the cap
+    * (BASELINE.md 100× table); production IVF sets nlist ≈ √N (FAISS
+    * guidance). Shared by the IVF seed set and the Lloyd's-family
+    * initial seeds, so ONE knob caps every N·K assignment in the
+    * suite. */
   private def capSeeds(spark: SparkSession, seeds: DataFrame, mod: Long): DataFrame =
-    spark.conf.getOption(MaxCentroidsKey) match {
-      case Some(k) => seeds.filter(col("vec_id") < lit(mod * k.toLong))
-      case None    => seeds
-    }
+    Knobs.maxCentroids(spark).fold(seeds)(k => seeds.filter(col("vec_id") < lit(mod * k)))
 
   /** Seed centroids: every 50th vector, optionally capped to the first
-    * [[MaxCentroidsKey]] seeds (deterministic prefix, broadcastable). */
+    * [[Knobs.maxCentroids]] seeds (deterministic prefix, broadcastable). */
   private def centroidsDf(spark: SparkSession, sfDir: String): DataFrame =
     capSeeds(spark, vecs(spark, sfDir).filter(col("vec_id") % 50 === 0), 50L)
       .select(col("vec_id").as("c_id"), col("v").as("cv"))
@@ -471,7 +463,7 @@ object Similarity {
   /** Session cache ([[SessionCache]]) of the k-NN edge table (q_id,
     * rank, vec_id, cos_ppm), eagerly checkpointed — |corpus|·[[TopK]]
     * rows of four longs, far smaller than the probe fan-in it saves.
-    * The [[MaxCentroidsKey]] cap is a knob, so a capped build never
+    * The [[Knobs.maxCentroids]] cap is a knob, so a capped build never
     * serves an uncapped caller. */
   private def knnEdges(spark: SparkSession, sfDir: String): DataFrame =
     SessionCache.get(spark, sfDir, "Similarity.knnEdges") {
@@ -1003,7 +995,8 @@ object Similarity {
     * behind the seed-mod chain AND the fixed-k trainers
     * ([[fixedKCentArr]]): one map-only broadcast-argmin pass + one
     * bounded per-(cluster, dim) mean per round, lineage checkpointed
-    * per round like dd_components. */
+    * per round like dd_components — so the returned table is the last
+    * round's [[Sampling.materialize]]d frame (callers cache it as is). */
   private def lloydsIterate(vm: DataFrame, seeds: DataFrame): DataFrame = {
     import graft.functions.NativeExpressions.argminL2
     var cents = seeds
@@ -1043,13 +1036,13 @@ object Similarity {
     * broadcast side a visible `keys=[]` aggregate, the single-row
     * contract PlanAuditSpec pins). A [[SessionCache]] entry, so a
     * restarted session retrains instead of touching another session's
-    * dead blocks, and a run under the [[MaxCentroidsKey]] cap never
+    * dead blocks, and a run under the [[Knobs.maxCentroids]] cap never
     * serves an uncapped caller. Cross-session persistence is the
     * [[writeCentroidArtifact]] / [[assignFromArtifact]] split. */
-  private def lloydsCentArr(spark: SparkSession, sfDir: String,
+  private[graft] def lloydsCentArr(spark: SparkSession, sfDir: String,
       seedMod: Int = LloydsSeedMod): DataFrame =
     SessionCache.get(spark, sfDir, s"Similarity.cent.$seedMod")(
-      Sampling.materialize(lloydsCentroids(spark, sfDir, seedMod)))
+      lloydsCentroids(spark, sfDir, seedMod))
       .agg(collect_list(struct(col("c_id"), col("cv"))).as("cents"))
 
   /** Trained FIXED-k centroids as the one-row broadcastable (c_id, cv)
@@ -1058,14 +1051,13 @@ object Similarity {
     * arbitrary as any deterministic pick, zero extra passes, and a
     * one-predicate SQL mirror). Cached like [[lloydsCentArr]], tagged
     * by k: the fixed-k chains ignore the seed-mod fixture rule AND the
-    * [[MaxCentroidsKey]] cap — k is already a constant, so the N·K
+    * [[Knobs.maxCentroids]] cap — k is already a constant, so the N·K
     * assignment is linear by construction. */
   private[graft] def fixedKCentArr(spark: SparkSession, sfDir: String, k: Int): DataFrame =
     SessionCache.get(spark, sfDir, s"Similarity.centK.$k") {
       val vm = lloydsVm(spark, sfDir).select(col("vec_id"), col("v"))
-      Sampling.materialize(lloydsIterate(vm,
-        vm.filter(col("vec_id") < k)
-          .select(col("vec_id").as("c_id"), col("v").as("cv"))))
+      lloydsIterate(vm, vm.filter(col("vec_id") < k)
+        .select(col("vec_id").as("c_id"), col("v").as("cv")))
     }.agg(collect_list(struct(col("c_id"), col("cv"))).as("cents"))
 
   /** Index BUILD: train the Lloyd's centroids and persist them as a

@@ -17,16 +17,6 @@ import graft.functions.TextFunctions._
 object Style {
 
   private val t = col("text")
-  private def toks = tokens(t)
-  private def lines = split(t, "\n")
-
-  private def countLines(re: String): Column =
-    size(filter(lines, l => l.rlike(re))).cast("long")
-
-  private def dividerCount(ch: String): Column = {
-    val q = java.util.regex.Pattern.quote(ch)
-    size(filter(lines, l => trim(l).rlike("^" + q + "{3,}$"))).cast("long")
-  }
 
   // Profanity lexicon (features/profanity.py:7-32 — the two multi-word
   // keys are unreachable in the reference's single-token lookup and are
@@ -48,9 +38,6 @@ object Style {
       .when(has(ProfLight), "light")
       .otherwise("none")
   }
-
-  /** Max-severity category over the first 1000 lowercased tokens. */
-  private def profanityCol: Column = profanityColOf(slice(tokens(lower(t)), 1, 1000))
 
   /** p17: style features. Every line/token/sentence statistic comes from
     * the one-pass stats kernel (the HOF line classifiers measured 22 s at

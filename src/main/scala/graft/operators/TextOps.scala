@@ -212,7 +212,7 @@ object TextOps {
     * exact p25/p50/p75/p95 (one map-side-combinable shuffle on source;
     * Spark's exact `percentile` and DuckDB's `quantile_cont` both
     * linear-interpolate, the same equivalence p01's cutoffs rely on). At
-    * 100 TB set [[graft.functions.Quantiles.ApproxKey]] on the session —
+    * 100 TB set [[graft.Knobs.approxQuantiles]] on the session —
     * the same call site emits approx_percentile: same plan shape, bounded
     * sketch state instead of a per-group sorted buffer. */
   def txQualityDist(spark: SparkSession, sfDir: String): DataFrame =

@@ -53,7 +53,7 @@ class AggregatesSpec extends SparkSpec {
     // nothing (the presentSorted lesson from PlanAuditSpec).
     assert(!Dedup.minhashPairsCore(spark, sfDir).queryExecution
       .executedPlan.toString.contains("might_contain"))
-    spark.conf.set(Dedup.BloomMinScanBytesKey, "0")
+    spark.conf.set(Knobs.bloomMinScanBytes.key, "0")
     try {
       // The sketch filter must sit in the plan (and, by construction,
       // below the shingle projection — non-candidates never tokenize).
@@ -62,7 +62,7 @@ class AggregatesSpec extends SparkSpec {
       val bloomed = rows()
       assert(bloomed == plain,
         s"bloom path diverged: ${bloomed.size} vs ${plain.size} pairs")
-    } finally spark.conf.unset(Dedup.BloomMinScanBytesKey)
+    } finally spark.conf.unset(Knobs.bloomMinScanBytes.key)
   }
 
   test("exactly-at-cap groups survive") {

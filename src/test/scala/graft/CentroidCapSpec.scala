@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
 
-/** The MaxCentroidsKey scale knob: capped runs use the deterministic
+/** The maxCentroids scale knob: capped runs use the deterministic
   * K-prefix of the seed set and keep every output contract; the unset
   * default is bit-identical to the fixture rule (the oracle-parity
   * path).
@@ -13,13 +13,13 @@ class CentroidCapSpec extends SparkSpec {
   import spark.implicits._
 
   private def withCap[T](k: Long)(body: => T): T = {
-    spark.conf.set(Similarity.MaxCentroidsKey, k.toString)
-    try body finally spark.conf.unset(Similarity.MaxCentroidsKey)
+    spark.conf.set(Knobs.maxCentroids.key, k.toString)
+    try body finally spark.conf.unset(Knobs.maxCentroids.key)
   }
 
   test("capped centroid set is the K-prefix of the seed set") {
     val uncapped = Similarity.ssKnnGraph(spark, sfDir) // warms nothing; just check conf is unset
-    assert(spark.conf.getOption(Similarity.MaxCentroidsKey).isEmpty)
+    assert(spark.conf.getOption(Knobs.maxCentroids.key).isEmpty)
     val seeds = Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") % 50 === 0).count()
     assert(seeds > 1, s"fixture needs >1 seeds at $sfDir (got $seeds)")

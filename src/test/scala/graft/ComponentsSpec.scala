@@ -47,8 +47,8 @@ class ComponentsSpec extends SparkSpec {
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   private def withGate[T](rows: Long)(body: => T): T = {
-    spark.conf.set(Sampling.BroadcastMaxRowsKey, rows.toString)
-    try body finally spark.conf.unset(Sampling.BroadcastMaxRowsKey)
+    spark.conf.set(Knobs.broadcastMaxRows.key, rows.toString)
+    try body finally spark.conf.unset(Knobs.broadcastMaxRows.key)
   }
 
   /** [[Dedup.labelComponents]] on a constructed graph, under the

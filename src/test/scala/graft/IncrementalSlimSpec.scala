@@ -3,7 +3,7 @@ package graft
 import graft.operators.{Dedup, Sampling}
 
 /** Differential guard for the dd_incremental slim path: on a
-  * LOW-density corpus past [[Dedup.BloomMinScanBytesKey]] the operator
+  * LOW-density corpus past [[Knobs.bloomMinScanBytes]] the operator
   * checkpoints only fp + signatures, generates candidates from
   * signatures alone and re-tokenizes just the Bloom-pruned candidate
   * docs for verification — where the small-corpus path checkpoints the
@@ -25,7 +25,7 @@ class IncrementalSlimSpec extends SparkSpec {
     assert(nDocs < 2 * nDistinct,
       s"fixture density $nDocs/$nDistinct selects the replica collapse, not the slim path")
     val small = run() // default: sf0.001 sits far below the scan-bytes gate
-    val key = Dedup.BloomMinScanBytesKey
+    val key = Knobs.bloomMinScanBytes.key
     spark.conf.set(key, "0") // force the large-corpus path
     val slim =
       try run()

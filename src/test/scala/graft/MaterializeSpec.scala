@@ -7,8 +7,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, udf}
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
-import graft.operators.{Sampling, SessionCache}
+import graft.operators.{Dedup, Sampling, SessionCache, Similarity}
 
 /** [[Sampling.materialize]], the one operator materialization helper:
   * it costs one job and memoizes the row count, and a frame's scope
@@ -31,6 +33,14 @@ class MaterializeSpec extends SparkSpec {
 
   private def rows(df: DataFrame): Seq[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+
+  /** A fresh copy of one sf0.001 table, so every session-cache build
+    * keyed on its corpus dir runs here. */
+  private def corpusCopy(table: String): String = {
+    val dir = Files.createTempDirectory("materialize_spec_corpus").toString
+    spark.read.parquet(s"$sfDir/$table.parquet").write.parquet(s"$dir/$table.parquet")
+    dir
+  }
 
   /** A build under a tag no other test uses, so it always runs. */
   private def build[T](body: => T): T =
@@ -73,6 +83,32 @@ class MaterializeSpec extends SparkSpec {
     assert(stored(inner) && stored(outer), "a nested build's frame was released")
     assert(rows(outer).size == 110)
     assert(!stored(after), "materialize after a failed build was session-scoped")
+  }
+
+  test("a centroid build does not checkpoint the last Lloyd's round a second time") {
+    // Each build, micro-fixed table included, ran 20 jobs on this copy
+    // while it wrapped lloydsIterate's already materialized last round
+    // in one more materialize.
+    val (_, fixedK) = jobsDuring(Similarity.fixedKCentArr(spark, corpusCopy("embeddings"), 5))
+    assert(fixedK <= 19, s"fixedKCentArr ran $fixedK jobs")
+    val (_, seeded) = jobsDuring(Similarity.lloydsCentArr(spark, corpusCopy("embeddings")))
+    assert(seeded <= 19, s"lloydsCentArr ran $seeded jobs")
+  }
+
+  test("the n-gram pair build leaves only its cached result in storage") {
+    val dir = corpusCopy("documents")
+    Sampling.releaseScratch(blocking = true)
+    val before = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val pairs = Dedup.ddNgramJaccard(spark, dir)
+    val first = pairs.collect().toSeq
+    assert(first.nonEmpty)
+    Sampling.releaseScratch(blocking = true)
+    // the build's own releases are asynchronous
+    eventually(timeout(30.seconds)) {
+      val added = spark.sparkContext.getRDDStorageInfo.filterNot(i => before(i.id))
+      assert(added.length == 1, s"RDDs left in storage: ${added.map(_.name).toSeq}")
+    }
+    assert(pairs.collect().toSeq == first)
   }
 
   test("no checkpoint call in main source bypasses Sampling") {

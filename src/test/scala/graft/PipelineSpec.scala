@@ -176,7 +176,7 @@ class PipelineSpec extends SparkSpec {
   private def assertComposedVerdictMatches(dir: String): Unit = {
     val stages = Seq("dd_decisions", "tx_gopher", "tx_contamination", "cur_verdict")
     for (gate <- Seq("off", "on")) {
-      spark.conf.set(Curation.ClassifierGateKey, gate)
+      spark.conf.set(Knobs.classifier.key, gate)
       try {
         val out = Files.createTempDirectory("graft_verdict_feed").toString
         Pipeline.run(spark, dir, out, "v", stages)
@@ -185,7 +185,7 @@ class PipelineSpec extends SparkSpec {
         assert(fed.columns.toSeq == standalone.columns.toSeq)
         assert(fed.except(standalone).isEmpty && standalone.except(fed).isEmpty,
           s"artifact-fed cur_verdict differs from the standalone builder (classifier $gate)")
-      } finally spark.conf.unset(Curation.ClassifierGateKey)
+      } finally spark.conf.unset(Knobs.classifier.key)
     }
   }
 
@@ -227,16 +227,16 @@ class PipelineSpec extends SparkSpec {
       Pipeline.run(spark, sfDir, out, "k", stages, incremental = true).collect()
         .map(r => r.getAs[String]("stage") -> r.getAs[Boolean]("skipped")).toMap
     Pipeline.run(spark, sfDir, out, "k", stages)
-    spark.conf.set(Curation.ClassifierGateKey, "on")
+    spark.conf.set(Knobs.classifier.key, "on")
     try {
       assert(skipped() == Map("tx_gopher" -> true, "dd_decisions" -> true,
         "tx_contamination" -> true, "cur_verdict" -> false))
       assert(spark.read.parquet(s"$out/k/cur_verdict").columns.contains("clf_keep"))
-    } finally spark.conf.unset(Curation.ClassifierGateKey)
+    } finally spark.conf.unset(Knobs.classifier.key)
     assert(!skipped()("cur_verdict"), "flipping the classifier back re-runs cur_verdict")
-    spark.conf.set(Sampling.BroadcastMaxRowsKey, "0")
+    spark.conf.set(Knobs.broadcastMaxRows.key, "0")
     try assert(skipped().values.forall(identity), "a shape-only knob must not re-run a stage")
-    finally spark.conf.unset(Sampling.BroadcastMaxRowsKey)
+    finally spark.conf.unset(Knobs.broadcastMaxRows.key)
   }
 
   test("a failing stage fails the run: named, siblings cancelled, no manifest, no threads") {

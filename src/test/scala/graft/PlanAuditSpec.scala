@@ -12,15 +12,15 @@ class PlanAuditSpec extends SparkSpec {
   private val allowedCross = Set("ss_brute_topk", "ss_sq8_topk", "ss_sq8_rerank")
 
   /** Build plans with the presentation checkpoint+sort disabled
-    * (Sampling.PresentationKey): presentSorted's localCheckpoint hides
+    * (Knobs.presentation): presentSorted's localCheckpoint hides
     * everything below it behind a LogicalRDD, so auditing the GATED
     * frame made the kernel-budget and cross-join assertions vacuous for
     * exactly the map-only operators that motivated them. The knob is
     * the production-sink path, so the audited plan is also the one a
     * real deployment executes. */
   private def withPresentationOff[T](body: => T): T = {
-    spark.conf.set(operators.Sampling.PresentationKey, "off")
-    try body finally spark.conf.unset(operators.Sampling.PresentationKey)
+    spark.conf.set(Knobs.presentation.key, "off")
+    try body finally spark.conf.unset(Knobs.presentation.key)
   }
 
   test("no query plans a CartesianProduct or BroadcastNestedLoop with a real right side") {
@@ -177,7 +177,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("presentation knob off: no sort or checkpoint in the production-sink plan") {
     // The production path (Sinks.partitionedParquet after
-    // PresentationKey=off) must not inherit the oracle gate's global
+    // graft.presentation=off) must not inherit the oracle gate's global
     // ORDER BY or pin the corpus to executor storage: the operator's
     // own plan should end at its projection/aggregate, and the sink's
     // repartition is the only exchange added on top.
@@ -272,7 +272,7 @@ class PlanAuditSpec extends SparkSpec {
     val sfSmall = "/root/testdata/sf0.001"
     val sfBig = "/root/testdata/sf0.1"
     withPresentationOff {
-      spark.conf.set(operators.Sampling.BroadcastMaxRowsKey, "0")
+      spark.conf.set(Knobs.broadcastMaxRows.key, "0")
       try {
         val flagged = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, q) =>
           val small = hintSideCounts(q(spark, sfSmall))
@@ -289,7 +289,7 @@ class PlanAuditSpec extends SparkSpec {
         assert(flagged.isEmpty,
           s"corpus-growing broadcast hints (rows at sf0.001 -> sf0.1):\n" +
             flagged.mkString("\n"))
-      } finally spark.conf.unset(operators.Sampling.BroadcastMaxRowsKey)
+      } finally spark.conf.unset(Knobs.broadcastMaxRows.key)
     }
   }
 

@@ -77,7 +77,7 @@ class QualityClassifierSpec extends SparkSpec {
       .select("doc_id", "train_keep").as[(Long, Long)].collect().toMap
     val clf = Curation.txQualityClassifier(spark, sfDir)
       .select("doc_id", "clf_keep").as[(Long, Long)].collect().toMap
-    spark.conf.set(Curation.ClassifierGateKey, "on")
+    spark.conf.set(Knobs.classifier.key, "on")
     try {
       val gated = Curation.curVerdict(spark, sfDir)
         .select("doc_id", "train_keep", "clf_keep")
@@ -91,7 +91,7 @@ class QualityClassifierSpec extends SparkSpec {
       // non-vacuous: the classifier actually drops something the base kept
       assert(gated.exists { case (id, keep, _) => base(id) == 1L && keep == 0L },
         "fixture corpus should contain at least one base-kept, clf-dropped doc")
-    } finally spark.conf.unset(Curation.ClassifierGateKey)
+    } finally spark.conf.unset(Knobs.classifier.key)
   }
 
   test("tx_quality_train: exact weights on a corpus with engineered labels") {

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.Quantiles
 import graft.operators.{DocPipeline, Rewards, TextOps}
 
 /** The approx-quantile knob must (a) actually switch the plan to
@@ -11,8 +10,8 @@ import graft.operators.{DocPipeline, Rewards, TextOps}
 class QuantilesSpec extends SparkSpec {
 
   private def withApprox[A](f: => A): A = {
-    spark.conf.set(Quantiles.ApproxKey, "true")
-    try f finally spark.conf.unset(Quantiles.ApproxKey)
+    spark.conf.set(Knobs.approxQuantiles.key, "true")
+    try f finally spark.conf.unset(Knobs.approxQuantiles.key)
   }
 
   test("the knob switches percentile to approx_percentile in the plan") {

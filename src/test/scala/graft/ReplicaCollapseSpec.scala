@@ -75,7 +75,7 @@ class ReplicaCollapseSpec extends SparkSpec {
     import graft.operators.Sampling
     // force the pre-ranged branch at fixture scale (its closed-form
     // pair count sits far below the production crossover default)
-    spark.conf.set(Sampling.PreRangeMinPairsKey, "0")
+    spark.conf.set(Knobs.preRangeMinPairs.key, "0")
     val got =
       try {
         val df = Dedup.ddSimhash(spark, dir)
@@ -83,7 +83,7 @@ class ReplicaCollapseSpec extends SparkSpec {
           case s: SortExec if s.global => s }
         assert(globalSorts.isEmpty, "presentation path re-planned a global sort")
         df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      } finally spark.conf.unset(Sampling.PreRangeMinPairsKey)
+      } finally spark.conf.unset(Knobs.preRangeMinPairs.key)
     assert(got.toSeq == got.sortBy(p => (p._1, p._2)).toSeq,
       "pre-ranged presentation output is not globally (id_a, id_b)-ordered")
     val fallback = Dedup.ddSimhashPairs(spark, dir, maxBroadcastRows = 0L)

@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.operators.{SessionCache, Similarity}
+import graft.operators.SessionCache
 
 /** The operators' session cache: one build per key under concurrent
   * gets, independent keys build in parallel, builds nest, a failed build
@@ -75,12 +75,12 @@ class SessionCacheSpec extends SparkSpec {
   test("flipping a registry knob misses, flipping it back hits the first entry") {
     val builds = new AtomicInteger()
     def get(): Int = SessionCache.get(spark, "SessionCacheSpec/knob", "t")(builds.incrementAndGet())
-    assert(SessionTuning.Knobs.contains(Similarity.MaxCentroidsKey))
-    assert(spark.conf.getOption(Similarity.MaxCentroidsKey).isEmpty)
+    assert(Knobs.all.contains(Knobs.maxCentroids))
+    assert(spark.conf.getOption(Knobs.maxCentroids.key).isEmpty)
     assert(get() == 1)
-    spark.conf.set(Similarity.MaxCentroidsKey, "3")
+    spark.conf.set(Knobs.maxCentroids.key, "3")
     try assert(get() == 2 && get() == 2)
-    finally spark.conf.unset(Similarity.MaxCentroidsKey)
+    finally spark.conf.unset(Knobs.maxCentroids.key)
     assert(get() == 1 && builds.get == 2)
   }
 }

@@ -14,9 +14,14 @@ class SessionConfSpec extends AnyFunSuite {
     assert(SessionTuning.parseSessionConf("a=1,b=2") == Seq("a" -> "1", "b" -> "2"))
   }
 
-  test("entries are trimmed; empty keys and entries without '=' are skipped") {
-    assert(SessionTuning.parseSessionConf(" a=1 ; =x ; junk ; c=d=e ") ==
+  test("blank entries are skipped; a malformed one is rejected") {
+    assert(SessionTuning.parseSessionConf(" a=1 ; ; c=d=e ;") ==
       Seq("a" -> "1", "c" -> "d=e"))
     assert(SessionTuning.parseSessionConf("") == Seq.empty)
+    for ((conf, bad) <- Seq("a=1; =x" -> "=x", "a=1;junk" -> "junk",
+        "graft.presentation" -> "graft.presentation")) {
+      val e = intercept[IllegalArgumentException](SessionTuning.parseSessionConf(conf))
+      assert(e.getMessage.contains(s"\"$bad\""), e.getMessage)
+    }
   }
 }
